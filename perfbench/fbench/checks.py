@@ -82,29 +82,3 @@ class ServeModel:
             return sorted((key[0], i, *self.rows[(key[0], i)]) for i in items)
         row = self.rows.get(key)
         return [] if row is None else [(*key, *row)]
-
-
-class LogModel:
-    """Events appended so far: total count and per-key amount sums."""
-
-    def __init__(self):
-        self.count = 0
-        self.sums: Counter = Counter()
-
-    def apply(self, pdf: pd.DataFrame) -> None:
-        self.count += len(pdf)
-        for k, v in pdf.groupby("key")["amount"].sum().items():
-            self.sums[int(k)] += int(v)
-
-
-def check_log(seen_count: int, seen_sums: Counter, model: LogModel, table_count: int,
-              base_count: int) -> list[str]:
-    """The consumer saw every appended row exactly once (count and
-    per-key sums), and the table's metadata count equals base + appended."""
-    out = []
-    if seen_count != model.count:
-        out.append(f"consumer rows: got {seen_count}, want {model.count}")
-    out += _diff_maps(dict(seen_sums), dict(model.sums), "consumer sum key")
-    if table_count != base_count + model.count:
-        out.append(f"table count: got {table_count}, want {base_count + model.count}")
-    return out

@@ -1,5 +1,4 @@
-"""Seeded input generators. Pure numpy/pandas: no Spark, no clock
-except the generator stamps the log workload asks for.
+"""Seeded input generators. Pure numpy/pandas: no Spark, no clock.
 
 A generator is created from (params, seed) and yields its inputs in a
 fixed order, so one seed always gives the same base table and the same
@@ -7,8 +6,6 @@ sequence of batches or requests, however many the run consumes.
 """
 
 from __future__ import annotations
-
-import time
 
 import numpy as np
 import pandas as pd
@@ -44,23 +41,35 @@ def user_bytes(pdf: pd.DataFrame) -> int:
 
 class CdcGen:
     """PK table keyed (tenant, id), bucketed by tenant. Base rows: every
-    tenant's ids [0, base_ids). A batch picks `tenants_per_batch`
-    distinct tenants uniformly; each row is an insert of a fresh id, or
-    an update or delete of a Zipf-skewed base id, by the configured
-    shares. `seq` orders every change; `__op` is 'U' or 'D'.
+    tenant's ids [0, base_ids). Batch i touches `buckets_per_batch`
+    buckets, taken in turn (with 2 of 8: buckets 0-1, then 2-3, 4-5,
+    6-7, 0-1, ...), and one tenant picked uniformly in each. Each row is
+    an insert of a fresh id, or an update or delete of a Zipf-skewed
+    base id, by the configured shares. `seq` orders every change;
+    `__op` is 'U' or 'D'. `tenant_bucket[t]` is tenant t's bucket.
 
-    Tenants are uniform, not skewed: a hot tenant pair would rewrite the
-    same buckets over and over, so how often auto compaction runs (and
-    with it the commit latency) would depend on the seed."""
+    The bucket order is fixed so that auto compaction runs on the same
+    commits in every run: a commit adds one data dir, so with
+    auto-compact-dirs = 3 it runs every 3rd commit. With buckets drawn
+    at random, how often it ran (and with it the commit latency and
+    write amplification) would depend on the seed, as it would with
+    skewed tenants."""
 
     DDL = "tenant int, id bigint, amount bigint, note string, seq bigint, __op string"
 
-    def __init__(self, params: dict, seed: int):
+    def __init__(self, params: dict, seed: int, tenant_bucket: list[int]):
         self.p = params
         self.rng = np.random.default_rng(seed)
         self.id_z = Zipf(self.rng, params["base_ids"], params["zipf_s"])
         self.seq = 0
         self.next_id = params["base_ids"]
+        self.by_bucket = [
+            [t for t, b in enumerate(tenant_bucket) if b == bucket]
+            for bucket in range(params["buckets"])
+        ]
+        if not all(self.by_bucket):
+            raise ValueError("every bucket needs at least one tenant")
+        self.batches = 0
 
     def _frame(self, tenant, ids, ops) -> pd.DataFrame:
         n = len(ids)
@@ -83,8 +92,12 @@ class CdcGen:
         return self._frame(np.repeat(np.arange(t), b), np.tile(np.arange(b), t), ["U"] * (t * b))
 
     def batch(self) -> pd.DataFrame:
-        p, n = self.p, self.p["batch_rows"]
-        tenants = self.rng.choice(p["tenants"], size=p["tenants_per_batch"], replace=False)
+        p, n, k = self.p, self.p["batch_rows"], self.p["buckets_per_batch"]
+        first = self.batches * k
+        self.batches += 1
+        tenants = [
+            self.rng.choice(self.by_bucket[b % p["buckets"]]) for b in range(first, first + k)
+        ]
         tenant = self.rng.choice(tenants, size=n)
         sh = p["shares"]
         kind = self.rng.choice(3, size=n, p=[sh["insert"], sh["update"], sh["delete"]])
@@ -153,30 +166,3 @@ class ServeGen:
             owned = items_of(int(u))
             items.append(int(owned[self.rng.integers(len(owned))]))
         return self._frame(users, items)
-
-
-class LogGen:
-    """Log table of events (key, amount, eid), bucketed by key. Keys are
-    Zipf-skewed; `eid` numbers every event; `gen_ts` stamps each row
-    with its creation time at the generator (microseconds)."""
-
-    DDL = "key bigint, amount bigint, eid bigint, gen_ts bigint"
-
-    def __init__(self, params: dict, seed: int):
-        self.p = params
-        self.rng = np.random.default_rng(seed)
-        self.key_z = Zipf(self.rng, params["keys"], params["zipf_s"])
-        self.eid = 0
-
-    def batch(self) -> pd.DataFrame:
-        n = self.p["batch_rows"]
-        eid = self.eid + np.arange(n)
-        self.eid += n
-        return pd.DataFrame(
-            {
-                "key": self.key_z.draw(n).astype(np.int64),
-                "amount": self.rng.integers(1, 1000, n).astype(np.int64),
-                "eid": eid.astype(np.int64),
-                "gen_ts": np.full(n, time.time_ns() // 1000, dtype=np.int64),
-            }
-        )

@@ -28,7 +28,7 @@ E2E = [
 
 # layers whose self time and call count are reported per traced op
 SELF_LAYERS = [
-    "client.lookup", "kv.upsert", "kv.lookup", "log.append", "log.scan",
+    "client.lookup", "kv.upsert", "kv.lookup", "log.scan",
     "log.latest_offsets", "catalog.current_commit", "catalog.commit",
     "reader.poll", "reader.commit_batch", "result.collect",
 ]
@@ -46,9 +46,6 @@ PER_LAYER = [
     ("kv.lookup.jobs", "1/op", "lower"),
     ("kv.lookup.tasks", "1/op", "lower"),
     ("kv.manifest_dirs", "count", "lower"),
-    ("log.append.jobs", "1/op", "lower"),
-    ("log.append.tasks", "1/op", "lower"),
-    ("log.append.bytes_written", "bytes/op", "lower"),
     ("log.commit_dirs", "count", "lower"),
     ("catalog.versions", "1/commit", "lower"),
     ("maintenance.compactions", "1/commit", "lower"),
@@ -69,6 +66,7 @@ PER_LAYER = [
     ("spark.run_ms", "ms/op", "lower"),
     ("spark.cpu_ms", "ms/op", "lower"),
     ("spark.driver_gap_pct", "%", "lower"),
+    ("spark.incomplete_stages", "1/op", "lower"),
     ("storage.bytes_written", "bytes/commit", "lower"),
     ("storage.files_written", "1/commit", "lower"),
     ("trace.spans", "1/op", "lower"),
@@ -77,6 +75,8 @@ PER_LAYER = [
     ("overhead.op_p90_ms", "ms", "lower"),
     ("overhead.visible_p50_ms", "ms", "lower"),
     ("overhead.visible_p90_ms", "ms", "lower"),
+    ("overhead.ops_per_s", "1/s", "higher"),
+    ("trace.peak_rss_mb", "MiB", "lower"),
 ]
 
 
@@ -100,7 +100,7 @@ def end_to_end(rec, setup_s: float, window_s: float, peak_rss_mb: float) -> dict
         "ops_per_s": rec.ops / window_s,
         "write_amp": _div(rec.space[-1]["bytes_written"], rec.user_bytes) if rec.space else 0.0,
         "space_amp": statistics.median(
-            _div(s["table_bytes"], s["live_bytes"]) for s in rec.space
+            _div(s["store_bytes"], s["live_bytes"]) for s in rec.space
         ) if rec.space else 0.0,
         "peak_rss_mb": peak_rss_mb,
     }
@@ -112,7 +112,15 @@ def _overhead(samples, q: float) -> float:
     return pct(on, q) - pct(off, q) if on and off else 0.0
 
 
-def per_layer(rec, spans, start_s: float, warm_s: float) -> dict[str, float]:
+def _rate_overhead(samples) -> float:
+    """Ops per second of the traced ops minus that of the untraced ops,
+    each from the ops' own wall times."""
+    on = [ms for ms, traced in samples if traced]
+    off = [ms for ms, traced in samples if not traced]
+    return 1e3 * (_div(len(on), sum(on)) - _div(len(off), sum(off))) if on and off else 0.0
+
+
+def per_layer(rec, spans, start_s: float, warm_s: float, peak_rss_mb: float) -> dict[str, float]:
     """Per-layer figures from the traced ops' spans plus the storage and
     reader records of the whole run."""
     selfs = self_times(spans)
@@ -140,14 +148,11 @@ def per_layer(rec, spans, start_s: float, warm_s: float) -> dict[str, float]:
         "kv.lookup.jobs": _div(spark_sum(["kv.lookup"], "jobs"), ops),
         "kv.lookup.tasks": _div(spark_sum(["kv.lookup"], "tasks"), ops),
         "kv.manifest_dirs": _div(sum(s["manifest_dirs"] for s in rec.space), len(rec.space)),
-        "log.append.jobs": _div(spark_sum(["log.append"], "jobs"), ops),
-        "log.append.tasks": _div(spark_sum(["log.append"], "tasks"), ops),
-        "log.append.bytes_written": _div(spark_sum(["log.append"], "output_bytes"), ops),
         "log.commit_dirs": _div(sum(s["log_dirs"] for s in rec.space), len(rec.space)),
         "catalog.versions": _div(rec.versions, rec.commits),
         "maintenance.compactions": _div(rec.compactions, rec.commits),
         "maintenance.compact_pct": 100 * _div(_maintenance_s(spans, by_name), wall),
-        "maintenance.jobs": _div(spark_sum(["table.upsert", "table.append"], "jobs"), ops),
+        "maintenance.jobs": _div(spark_sum(["table.upsert"], "jobs"), ops),
         "maintenance.bytes_rewritten": _div(rec.rewritten_bytes, rec.commits),
         "reader.batch_rows": _div(sum(rec.batch_rows), len(rec.batch_rows)),
         "reader.lag_rows": _div(sum(rec.lag_rows), len(rec.lag_rows)),
@@ -165,6 +170,7 @@ def per_layer(rec, spans, start_s: float, warm_s: float) -> dict[str, float]:
         "spark.run_ms": _div(spark_sum(every, "run_ms"), ops),
         "spark.cpu_ms": _div(spark_sum(every, "cpu_ms"), ops),
         "spark.driver_gap_pct": 100 * _div(wall * 1e3 - spark_sum(every, "stage_wall_ms"), wall * 1e3),
+        "spark.incomplete_stages": _div(spark_sum(every, "incomplete_stages"), ops),
         "storage.bytes_written": _div(rec.space[-1]["bytes_written"], rec.commits) if rec.space else 0.0,
         "storage.files_written": _div(rec.space[-1]["files_written"], rec.commits) if rec.space else 0.0,
         "trace.spans": _div(len(spans), ops),
@@ -173,19 +179,20 @@ def per_layer(rec, spans, start_s: float, warm_s: float) -> dict[str, float]:
         "overhead.op_p90_ms": _overhead(rec.op_ms, 90),
         "overhead.visible_p50_ms": _overhead(rec.visible_ms, 50),
         "overhead.visible_p90_ms": _overhead(rec.visible_ms, 90),
+        "overhead.ops_per_s": _rate_overhead(rec.cycle_ms),
+        "trace.peak_rss_mb": peak_rss_mb,
     })
     return out
 
 
 def _maintenance_s(spans, by_name) -> float:
-    """Time in table.upsert/append outside their kv.upsert/log.append
-    child: auto compaction, retention and the table lock."""
+    """Time in table.upsert outside its kv.upsert child: auto
+    compaction, retention and the table lock."""
     inner = {}
     for s in spans:
-        if s.name in ("kv.upsert", "log.append") and s.parent is not None:
+        if s.name == "kv.upsert" and s.parent is not None:
             inner[s.parent] = inner.get(s.parent, 0.0) + s.end - s.start
     return sum(
         s.end - s.start - inner.get(s.sid, 0.0)
-        for n in ("table.upsert", "table.append")
-        for s in by_name.get(n, [])
+        for s in by_name.get("table.upsert", [])
     )

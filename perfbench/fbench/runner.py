@@ -2,7 +2,7 @@
 the workload, set the workload up several times, run its closed loop,
 check outputs, print one JSON line.
 
-    python3 perfbench/run.py --workload cdc_ingest --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload cdc_ingest --seed 1 --seconds 20 --trace 0
 
 Everything the run writes goes under `.perfbench/` in the checkout:
 the warehouse, Spark's and Python's temp files (removed at the end) and,
@@ -12,6 +12,7 @@ for a traced run, the spans (`.perfbench/traces/`).
 from __future__ import annotations
 
 import argparse
+import gc
 import json
 import os
 import shutil
@@ -63,6 +64,9 @@ def measure(spark, name: str, params: dict, seed: int, seconds: float, trace: bo
         setups.append(time.perf_counter() - t0)
         if i < SETUP_REPEATS - 1:
             shutil.rmtree(wh)
+    # start every run's loop from a collected heap, in Python and the JVM
+    gc.collect()
+    spark._jvm.System.gc()
     rec = Recorder()
     limit = 3 * seconds + 10  # a cycle that never closes still ends
     if tracer:
@@ -80,7 +84,7 @@ def measure(spark, name: str, params: dict, seed: int, seconds: float, trace: bo
     wl.final_checks(rec)
     setup_s = start_s + warm_s + statistics.median(setups)
     if trace:
-        values = metrics.per_layer(rec, tracer.spans, start_s, warm_s)
+        values = metrics.per_layer(rec, tracer.spans, start_s, warm_s, peak_rss_mb(spark))
         specs = metrics.PER_LAYER
         traces = ROOT / ".perfbench" / "traces"
         traces.mkdir(parents=True, exist_ok=True)
@@ -134,13 +138,14 @@ def main(argv=None) -> int:
     os.environ.update(
         TMPDIR=str(tmp),
         SPARK_LOCAL_DIRS=str(tmp),
-        # a fixed heap (-Xms = -Xmx) keeps the JVM's resident size from
-        # depending on when the collector chose to grow the heap;
+        # a fixed, pre-touched heap (-Xms = -Xmx, AlwaysPreTouch) keeps
+        # the JVM's resident size from depending on when the collector
+        # chose to grow the heap or reach new regions of it;
         # -XX:-UsePerfData keeps the JVM from writing /tmp/hsperfdata_*
         FLUSS_SPARK_DRIVER_MEM="2g",
         PYSPARK_SUBMIT_ARGS=(
             f"--conf spark.ui.showConsoleProgress=false --driver-java-options "
-            f"'-Xms2g -XX:-UsePerfData -Djava.io.tmpdir={tmp}' pyspark-shell"
+            f"'-Xms2g -XX:+AlwaysPreTouch -XX:-UsePerfData -Djava.io.tmpdir={tmp}' pyspark-shell"
         ),
     )
     t0 = time.perf_counter()

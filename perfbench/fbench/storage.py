@@ -3,14 +3,15 @@ directory after each commit. Nothing here calls into Spark.
 
 - written: bytes and files that appeared (or changed) since the last
   walk, anywhere under the table dir (data, logs and metadata).
-- table bytes: every byte under the table dir at the time of the walk.
-- live bytes: bytes the current version can read: the manifest's
-  (data dir, bucket) entries of a PK table plus the committed log dirs
-  (a PK table's changelog is readable, so it is live too).
-- compacted bytes: the part auto compaction rewrites, i.e. the live
-  snapshot of a PK table or the live log of a log table.
-- manifest dirs: distinct snapshot data dirs the manifest references
-  (PK tables); log dirs: committed log commit dirs (any table).
+- store bytes: every byte under the table dir (data, staging and
+  metadata), except the changelog (the WAL, with before-images) in the
+  log and remote dirs. Snapshot compaction never
+  rewrites the changelog, so it only grows and would dilute the ratio.
+- live bytes: the data the current version reads: the manifest's
+  (data dir, bucket) entries. store / live is the space amplification;
+  stale snapshot dirs left behind, staging files and metadata raise it.
+- manifest dirs: distinct snapshot data dirs the manifest references;
+  log dirs: committed changelog commit dirs.
 
 The files go through the OS page cache; nothing here flushes or drops
 it, so the figures are the same on both sides of an A/B.
@@ -60,20 +61,19 @@ class TableSpace:
         t = self.table
         state = t.catalog.current_commit(t.db, t.name)
         local, remote = t.log.committed_dirs()
-        log_dirs = {**remote, **local}
-        log_live = sum(_under(now, p) for p in log_dirs.values())
-        manifest = (t.kv._manifest(state.snapshot_version) or {}) if t.kv is not None else {}
-        snap_live = sum(
+        manifest = t.kv._manifest(state.snapshot_version) or {}
+        store = (_under(now, self.root) - _under(now, t.log.log_dir)
+                 - _under(now, t.log.remote_dir))
+        live = sum(
             _under(now, os.path.join(t.kv.snapshot_dir, d, f"__bucket={b}"))
             for b, d in manifest.items()
         )
         return {
             "version": state.version,
-            "table_bytes": _under(now, self.root),
-            "live_bytes": snap_live + log_live,
-            "compacted_bytes": snap_live if t.kv is not None else log_live,
+            "store_bytes": store,
+            "live_bytes": live,
             "manifest_dirs": len(set(manifest.values())),
-            "log_dirs": len(log_dirs),
+            "log_dirs": len({**remote, **local}),
             "bytes_written": self.bytes_written,
             "files_written": self.files_written,
         }

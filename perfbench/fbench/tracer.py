@@ -43,13 +43,11 @@ class Span:
 # (class, method, span name) for every wrapped public entry point
 ENTRY_POINTS = [
     (FlussTable, "upsert", "table.upsert"),
-    (FlussTable, "append", "table.append"),
     (FlussTable, "lookup", "table.lookup"),
     (FlussTable, "prefix_lookup", "table.lookup"),
     (KvStore, "upsert", "kv.upsert"),
     (KvStore, "lookup", "kv.lookup"),
     (KvStore, "prefix_lookup", "kv.lookup"),
-    (LogStore, "append", "log.append"),
     (LogStore, "scan", "log.scan"),
     (LogStore, "latest_offsets", "log.latest_offsets"),
     (Catalog, "current_commit", "catalog.current_commit"),
@@ -64,6 +62,9 @@ ENTRY_POINTS = [
 _NO_JOBS = ("catalog.", "log.latest_offsets", "reader.commit_batch")
 
 STAGE_FIELDS = ("tasks", "run_ms", "cpu_ms", "input_bytes", "output_bytes", "shuffle_bytes")
+
+# milliseconds to wait for Spark's listener bus to deliver the op's events
+_DRAIN_TIMEOUT_MS = 10_000
 
 
 class Tracer:
@@ -138,19 +139,30 @@ class Tracer:
     # -- Spark status ----------------------------------------------------
     def collect_spark(self, op: int) -> None:
         """Read stage totals for the op's spans from the status store.
-        Called after the op's timer stopped."""
-        tracker, store = self.sc.statusTracker(), self.sc._jsc.sc().statusStore()
+        Called after the op's timer stopped. The status store is filled
+        by Spark's asynchronous listener bus, so this first waits until
+        the bus has delivered every queued event. A stage still not
+        complete after that counts in `incomplete_stages`."""
+        jsc = self.sc._jsc.sc()
+        jsc.listenerBus().waitUntilEmpty(_DRAIN_TIMEOUT_MS)
+        tracker, store = self.sc.statusTracker(), jsc.statusStore()
         for s in self.spans:
             if s.op != op or s.name.startswith(_NO_JOBS):
                 continue
-            tot = dict.fromkeys(("jobs", *STAGE_FIELDS), 0)
+            tot = dict.fromkeys(("jobs", "incomplete_stages", *STAGE_FIELDS), 0)
             intervals = []
             for jid in tracker.getJobIdsForGroup(f"pb{s.sid}"):
                 tot["jobs"] += 1
                 info = tracker.getJobInfo(jid)
-                for stage_id in info.stageIds if info else ():
+                if info is None:
+                    tot["incomplete_stages"] += 1
+                    continue
+                for stage_id in info.stageIds:
                     st = _stage(store, stage_id)
-                    if st is None:  # skipped: its output was reused
+                    if st == "skipped":  # its output was reused
+                        continue
+                    if st is None:
+                        tot["incomplete_stages"] += 1
                         continue
                     for k in STAGE_FIELDS:
                         tot[k] += st[k]
@@ -164,11 +176,15 @@ class Tracer:
                 f.write(json.dumps(asdict(s)) + "\n")
 
 
-def _stage(store, stage_id: int) -> dict | None:
+def _stage(store, stage_id: int) -> dict | str | None:
+    """The stage's totals, "skipped" for a stage whose output was
+    reused, or None for one the store does not hold as complete."""
     try:
         st = store.lastStageAttempt(stage_id)
     except Py4JJavaError:
         return None
+    if st.status().toString() == "SKIPPED":
+        return "skipped"
     sub, done = st.submissionTime(), st.completionTime()
     if not (sub.isDefined() and done.isDefined()):
         return None

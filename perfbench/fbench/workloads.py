@@ -1,4 +1,4 @@
-"""The three closed-loop workloads. One client thread each; every
+"""The two closed-loop workloads. One client thread each; every
 operation waits for the previous one. Each workload builds its table
 from seeded inputs in `setup`, runs one operation per `step`, and checks
 the program's outputs in `final_checks`.
@@ -15,7 +15,6 @@ from collections import Counter
 from contextlib import nullcontext
 from dataclasses import dataclass, field
 
-import pandas as pd
 from pyspark.sql import functions as F
 
 from fbench import checks, gen
@@ -33,6 +32,7 @@ class Recorder:
 
     op_ms: list[tuple[float, bool]] = field(default_factory=list)  # (ms, traced)
     visible_ms: list[tuple[float, bool]] = field(default_factory=list)
+    cycle_ms: list[tuple[float, bool]] = field(default_factory=list)  # whole op, tracer reads too
     ops: int = 0  # client operations completed (commits and lookups)
     user_bytes: int = 0  # user bytes committed
     attempted: int = 0
@@ -84,6 +84,7 @@ class Workload:
 
     def operation(self, kind: str, traced: bool):
         self.ops += 1
+        self.op_start = time.perf_counter()
         if self.tracer is None:
             return nullcontext()
         return self.tracer.operation(self.ops, f"op.{kind}", traced)
@@ -92,10 +93,13 @@ class Workload:
         return nullcontext() if self.tracer is None else self.tracer.span(name)
 
     def after_op(self, traced: bool, rec: Recorder, held=None) -> None:
+        """Read the traced op's Spark and Catalyst figures, then record
+        the op's whole wall time, those reads included."""
         if traced:
             self.tracer.collect_spark(self.ops)
             if held is not None:
                 rec.catalyst.append(catalyst_ms(held))
+        rec.cycle_ms.append(((time.perf_counter() - self.op_start) * 1e3, traced))
 
     def start_space(self) -> None:
         """Count storage from the set-up's end state."""
@@ -114,7 +118,7 @@ class Workload:
         rec.user_bytes += gen.user_bytes(user_rows)
         if moved > 1:
             rec.compactions += moved - 1
-            rec.rewritten_bytes += s["compacted_bytes"]
+            rec.rewritten_bytes += s["live_bytes"]
         return moved > 1
 
     def drain(self, rec: Recorder, agg) -> tuple[list, object]:
@@ -143,7 +147,6 @@ class CdcIngest(Workload):
 
     def setup(self, warehouse: str) -> None:
         p = self.p
-        self.gen = gen.CdcGen(p, self.seed)
         self.model = checks.LwwModel(["tenant", "id"], ["amount", "note", "seq"])
         self.table = create_table(
             Catalog(warehouse), "bench", "cdc",
@@ -154,6 +157,10 @@ class CdcIngest(Workload):
                 properties={"table.snapshot.auto-compact-dirs": str(p["compact_dirs"])},
             ),
         )
+        # each tenant's bucket, by the engine's own bucket expression
+        tenants = self.spark.range(p["tenants"]).select(F.col("id").cast("int").alias("tenant"))
+        buckets = tenants.select("tenant", self.table.kv._bucket_expr().alias("b")).collect()
+        self.gen = gen.CdcGen(p, self.seed, [b for _, b in sorted(buckets)])
         base = self.gen.base()
         self.table.upsert(self.spark.createDataFrame(base, gen.CdcGen.DDL), ordering=["seq"])
         self.model.apply(base)
@@ -251,7 +258,10 @@ class ServeLookup(Workload):
         rec.visible_ms.append(((t1 - t0) * 1e3, traced))
         rec.ops += 1
         rec.check(checks.check_lookup(got, self.model.expected(kind, key), key))
-        return False
+        # a cycle is a trickle upsert and the lookups up to the next one
+        # (the first lookups after an upsert are the slow ones); the
+        # loop ends before a trickle, once it has measured one
+        return rec.commits > 0 and self.lookups % self.p["trickle_every"] == 0
 
     def _trickle(self, rec: Recorder) -> bool:
         pdf = self.gen.trickle(self.model.items_of)
@@ -264,80 +274,11 @@ class ServeLookup(Workload):
         rec.attempted += 1
         rec.ops += 1
         self.record_commit(rec, pdf)
-        return True
+        return False
 
     def final_checks(self, rec: Recorder) -> None:
         snap = self.table.snapshot(self.spark).select("user", "item", "score", "label", "seq")
         rec.check(checks.check_snapshot(snap.collect(), self.model.rows, 2))
 
 
-class LogStream(Workload):
-    """Event batches appended to a bucketed log table with auto log
-    compaction; after every append a LogStreamReader drains the new rows
-    and runs a keyed aggregate over each batch."""
-
-    name = "log_stream"
-
-    def setup(self, warehouse: str) -> None:
-        p = self.p
-        self.gen = gen.LogGen(p, self.seed)
-        self.model = checks.LogModel()
-        self.table = create_table(
-            Catalog(warehouse), "bench", "events",
-            TableSchema(
-                fields=[Field("key", "BIGINT"), Field("amount", "BIGINT"), Field("eid", "BIGINT"),
-                        Field("gen_ts", "BIGINT")],
-                bucket_keys=["key"], num_buckets=p["buckets"],
-                properties={"table.log.auto-compact-commits": str(p["compact_commits"])},
-            ),
-        )
-        base = pd.concat([self.gen.batch() for _ in range(p["base_batches"])], ignore_index=True)
-        self.table.append(self.spark.createDataFrame(base, gen.LogGen.DDL))
-        self.base_count = len(base)
-        self.reader = LogStreamReader(self.table, self.spark, startup_mode="latest")
-        if self.reader.poll() is not None:
-            raise RuntimeError("a latest-mode reader saw data before any new append")
-        self.hwm = sum(self.table.latest_offsets().values())
-        self.seen_count = 0
-        self.seen_sums: Counter = Counter()
-        self.start_space()
-
-    def step(self, rec: Recorder) -> bool:
-        pdf = self.gen.batch()
-        df = self.spark.createDataFrame(pdf, gen.LogGen.DDL)
-        traced = self.traced("commit")
-        with self.operation("commit", traced):
-            t0 = time.perf_counter()
-            state = self.table.append(df)
-            t1 = time.perf_counter()
-            rows, held = self.drain(
-                rec,
-                lambda b: b.groupBy("key").agg(
-                    F.count(F.lit(1)).alias("n"), F.sum("amount").alias("s"),
-                    F.min("gen_ts").alias("ts"),
-                ),
-            )
-            seen = time.time()
-        self.after_op(traced, rec, held)
-        rec.op_ms.append(((t1 - t0) * 1e3, traced))
-        # generator stamp (carried in the rows) to the aggregated result
-        stamp = min((r["ts"] for r in rows), default=pdf["gen_ts"].iat[0])
-        rec.visible_ms.append((seen * 1e3 - stamp / 1e3, traced))
-        hwm = sum(state.log_hwm.values())
-        rec.lag_rows.append(hwm - self.hwm)
-        rec.batch_rows.append(sum(r["n"] for r in rows))
-        self.hwm = hwm
-        self.seen_count += sum(r["n"] for r in rows)
-        for r in rows:
-            self.seen_sums[r["key"]] += r["s"]
-        self.model.apply(pdf)
-        rec.attempted += 1
-        rec.ops += 1
-        return self.record_commit(rec, pdf)
-
-    def final_checks(self, rec: Recorder) -> None:
-        rec.check(checks.check_log(self.seen_count, self.seen_sums, self.model,
-                                   self.table.count(), self.base_count))
-
-
-WORKLOADS = {w.name: w for w in (CdcIngest, ServeLookup, LogStream)}
+WORKLOADS = {w.name: w for w in (CdcIngest, ServeLookup)}

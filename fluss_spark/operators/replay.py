@@ -4,20 +4,29 @@ Reproduces the semantics of the reference's KV write path
 (server/kv/KvTablet.java:514-792: read-old → merge → emit
 +I/-U/+U/-D into the WAL) and its row mergers
 (server/kv/rowmerger/{Default,FirstRow,Versioned,Aggregate}RowMerger.java)
-— but as ONE declarative Spark plan instead of a per-record RocksDB
-loop: rows are hash-distributed by primary key, running merged state is
-computed with window aggregates over (pk, __seq), the changelog is
-derived by lag() comparison, and the snapshot is the final state per
-key. Everything stays in whole-stage codegen; no Python in the path.
+— but as ONE declarative Spark SQL statement instead of a per-record
+RocksDB loop: running merged state is computed with window aggregates
+over (pk, __seq), the changelog is derived by lag() comparison.
+Everything stays in whole-stage codegen; no Python in the path.
 
-Input contract (prepared by sources/kv.py):
-    pk cols + data cols
+Each merge engine is a SQL builder nested over a source relation;
+`fold_changelog` compiles engine + changelog image into one spark.sql
+statement. The commit path (sources/kv.py) nests it over its
+seed ∪ batch → __seq statement; `replay` wraps it for a ready fold-input
+DataFrame.
+
+Input contract (the fold-input relation):
+    pk cols + data cols (+ clustering / carried columns)
     __op      'U' (upsert) | 'D' (delete)
     __seq     long, per-pk fold order; seed (existing snapshot) rows = 0
     __is_seed 1 for snapshot seed rows, else 0
 
-Output: changelog rows (data cols + _change_type + __seq + __sub) and
-snapshot rows (data cols), as two DataFrames derived from one plan.
+Output: changelog rows — __seq, carried columns, __sub, _change_type,
+data cols. Every seed row also comes out as a prior row (_change_type
+NULL, __sub -1, data cols verbatim): the fused commit's
+snapshot-rewrite feed. `replay` additionally returns the
+snapshot, derived from that changelog by the replay invariant
+(`_snapshot_from_changelog`).
 
 A sequential pandas fold (`replay_exact`) covers the one combination the
 window path does not: partial updates interleaved with deletes, where a
@@ -27,7 +36,7 @@ server/kv/partialupdate/PartialUpdater.java:104-138).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -38,6 +47,7 @@ from fluss_spark.types import (
     UPDATE_AFTER,
     UPDATE_BEFORE,
     TableSchema,
+    parse_type,
 )
 
 OP_COL = "__op"
@@ -48,12 +58,12 @@ SUB_COL = "__sub"
 _LONG_MIN = -(2**63)
 
 
-# NOTE: the fold plans below are built from WHOLE-SELECT SQL strings
-# (selectExpr), not per-column Column objects. Each Column call is a
-# py4j round trip (~0.7ms of pure driver latency); at a few hundred
-# calls per commit that was ~30% of the steady-state commit constant.
-# One selectExpr = one round trip and one JVM-side parse, producing the
-# identical resolved plan.
+# NOTE: the fold is built from WHOLE-SELECT SQL strings nested into one
+# statement, not per-column Column objects or per-layer DataFrames. Each
+# Column call is a py4j round trip (~0.7ms of pure driver latency), and
+# each DataFrame layer is an eager JVM re-analysis of the accumulated
+# plan; one spark.sql statement is one parse and one analysis, producing
+# the identical resolved plan.
 
 
 def _run_over(pk: list[str]) -> str:
@@ -71,13 +81,13 @@ def _lag_over(pk: list[str], order_cols: list[str] | None = None) -> str:
     return f"PARTITION BY {pks} ORDER BY {order}"
 
 
-# `cluster_cols` (below) prefixes every fold window's PARTITION BY with
-# coarser clustering columns that are FUNCTIONS OF the primary key
-# (the commit path passes [__bucket], bucket = pmod(hash(pk), n)): the
-# per-key frames are identical, but a frame partitioned by
-# (bucket, pk) is satisfied by a hash(bucket) exchange — so the fold,
-# the changelog emission and the downstream commit windows (offsets,
-# is-last, id carry — all PARTITION BY bucket[, pk]) share ONE
+# `part` (below) is the window partition of every fold layer: the
+# primary key, prefixed by coarser clustering columns that are FUNCTIONS
+# OF the primary key (the commit path passes [__bucket], bucket =
+# pmod(hash(pk), n)): the per-key frames are identical, but a frame
+# partitioned by (bucket, pk) is satisfied by a hash(bucket) exchange —
+# so the fold, the changelog emission and the downstream commit windows
+# (offsets, is-last, id carry — all PARTITION BY bucket[, pk]) share ONE
 # num_buckets-wide exchange instead of a pk exchange plus a bucket
 # exchange (guide §2.4: two operations keyed the same way share one
 # exchange).
@@ -87,19 +97,31 @@ def _struct_sql(cols: list[str]) -> str:
     return "struct(" + ", ".join(f"`{c}`" for c in cols) + ")"
 
 
-def emit_select_list(
+def _emit_select_list(
     cols: list[str],
     cur_state: str,
     prev_state: str,
     prev_present: str,
     emit_cond: str,
     extra_cols: list[str] | None = None,
-    emit_prior: bool = False,
 ) -> list[str]:
-    """Select list of the changelog-emission layer (see `_emit`). A
-    standalone string builder so the layered fold (`_emit`) and the
-    one-statement SQL fold (kv.KvStore._fold_replay_sql) emit from the
-    SAME expression strings."""
+    """Select list of the changelog-emission layer: per input record an
+    array of 0-2 change events, exploded JVM-side. All state arguments
+    are SQL expressions over the layer's input.
+
+    +I when the key appears, -U/+U pair on update, -D on delete —
+    exactly KvTablet.applyInsert/applyUpdate/applyDelete
+    (KvTablet.java:755-792).
+
+    ONE plan node: the events are FLAT structs (sub + change type + data
+    columns at the top level) unpacked by inline() in the same select
+    that builds them, and array_compact drops records with no event.
+
+    `extra_cols` ride through unchanged (the commit path keeps __bucket
+    so its windows reuse the fold's exchange). Each SEED row is emitted
+    as a prior-state row (`_change_type` NULL, `__sub` -1, data columns
+    verbatim) — the fused commit's snapshot-rewrite feed, riding the
+    fold's exchange instead of a second scan of the snapshot."""
 
     def mk(ct_expr: str, row: str | None, sub: int) -> str:
         val = (lambda c: f"({row}).`{c}`") if row is not None else (lambda c: f"`{c}`")
@@ -118,58 +140,132 @@ def emit_select_list(
         " END"
     )
     slot2 = f"CASE WHEN {is_u} AND ({prev_present}) THEN {mk(repr(UPDATE_AFTER), cur_state, 1)} END"
-    slots = [slot1, slot2]
-    if emit_prior:
-        # the seed row IS the prior-snapshot row: raw columns, no state
-        # struct (identical values — the seed sorts first, so no event
-        # has folded into the running state yet)
-        slots.append(
-            f"CASE WHEN `{SEED_COL}` = 1 THEN {mk('CAST(NULL AS STRING)', None, -1)} END"
-        )
+    # the seed row IS the prior-snapshot row: raw columns, no state
+    # struct (identical values — the seed sorts first, so no event has
+    # folded into the running state yet)
+    prior = f"CASE WHEN `{SEED_COL}` = 1 THEN {mk('CAST(NULL AS STRING)', None, -1)} END"
     return [
         f"`{SEQ_COL}`",
         *[f"`{c}`" for c in (extra_cols or [])],
-        f"inline(array_compact(array({', '.join(slots)})))",
+        f"inline(array_compact(array({slot1}, {slot2}, {prior})))",
     ]
 
 
-def _emit(
-    df: DataFrame,
+def _emit_sql(
+    src: str,
     cols: list[str],
     cur_state: str,
     prev_state: str,
     prev_present: str,
     emit_cond: str,
+    extra: list[str],
+) -> str:
+    select = _emit_select_list(cols, cur_state, prev_state, prev_present, emit_cond, extra)
+    return f"SELECT {', '.join(select)} FROM ({src})"
+
+
+def fold_changelog(
+    spark: SparkSession,
+    src: str,
+    frames: dict[str, DataFrame],
+    schema: TableSchema,
+    part: list[str],
     extra_cols: list[str] | None = None,
-    emit_prior: bool = False,
+    order_cols: list[str] | None = None,
+    partial_update_cols: list[str] | None = None,
+    merge_mode: str | None = None,
+    delete_frames: list[DataFrame] | None = None,
+    prior_rows: bool = True,
 ) -> DataFrame:
-    """Assemble changelog rows: per input record an array of 0-2 change
-    events, exploded JVM-side. All state arguments are SQL expression
-    strings over `df`'s columns.
+    """The fold compiler: the changelog of fold-input statement `src`
+    (its `{name}` placeholders bound to `frames`) as ONE spark.sql
+    statement — engine body + changelog image nested over `src`.
 
-    +I when the key appears, -U/+U pair on update, -D on delete —
-    exactly KvTablet.applyInsert/applyUpdate/applyDelete
-    (KvTablet.java:755-792).
+    `delete_frames` are the input frames that may carry deletes (those
+    with an __op column; none = all upserts). They feed the only jobs
+    the fold itself runs, each a tiny limit-1 probe run only where its
+    answer matters: DeleteBehavior.DISABLE (metadata/DeleteBehavior.java
+    :28-47) raises on any delete, and a default-engine partial update
+    whose batch does delete takes `replay_exact` — the one fold that is
+    truly sequential — with the image applied over its output.
 
-    ONE plan node: the events are FLAT structs (sub + change type + data
-    columns at the top level) unpacked by inline() in the same select
-    that builds them, and the seed-row suppression rides the slot
-    conditions (array_compact drops seed rows entirely) — three plan
-    nodes fused into one, a measurable slice of the per-commit driver
-    constant.
-
-    `extra_cols` ride through unchanged (the commit path keeps __bucket
-    so its windows reuse the fold's exchange). `emit_prior` additionally
-    emits each SEED row as a prior-state row (`_change_type` NULL,
-    `__sub` -1, data columns verbatim) — the exact convention the fused
-    commit's snapshot-rewrite feed uses, so the prior rows ride the
-    fold's exchange instead of a second scan of the snapshot."""
-    return df.selectExpr(
-        *emit_select_list(
-            cols, cur_state, prev_state, prev_present, emit_cond,
-            extra_cols, emit_prior,
+    `prior_rows=False` drops the seed's prior rows (the WAL-only commit
+    appends events alone)."""
+    extra = list(extra_cols or [])
+    deletes = list(delete_frames or [])
+    engine = "default" if merge_mode == "overwrite" else schema.merge_engine
+    if schema.delete_behavior == "disable" and any(_has_deletes(d) for d in deletes):
+        raise ValueError("DELETE disabled for this table (table.delete.behavior=disable)")
+    if (
+        partial_update_cols
+        and engine == "default"
+        and schema.delete_behavior not in ("ignore", "disable")
+        and any(_has_deletes(d) for d in deletes)
+    ):
+        exact = replay_exact(spark.sql(src, **frames), schema, partial_update_cols, extra)
+        frames = {"changelog": exact}
+        sql = _changelog_image_sql("SELECT * FROM {changelog}", schema, extra, full_row=False)
+    else:
+        sql = _changelog_sql(
+            src, schema, part, extra, order_cols, partial_update_cols, merge_mode,
+            may_have_deletes=bool(deletes),
         )
-    )
+    if not prior_rows:
+        sql = f"SELECT * FROM ({sql}) WHERE `{CHANGE_TYPE_COL}` IS NOT NULL"
+    return spark.sql(sql, **frames)
+
+
+def _has_deletes(df: DataFrame) -> bool:
+    return df.filter(f"`{OP_COL}` = 'D'").limit(1).count() > 0
+
+
+def _changelog_sql(
+    src: str,
+    schema: TableSchema,
+    part: list[str],
+    extra_cols: list[str] | None = None,
+    order_cols: list[str] | None = None,
+    partial_update_cols: list[str] | None = None,
+    merge_mode: str | None = None,
+    may_have_deletes: bool = True,
+) -> str:
+    """Changelog statement of the window fold over fold-input statement
+    `src`. Dispatches on the table's merge engine
+    (MergeEngineType.java:23-64); `merge_mode='overwrite'` bypasses the
+    merge engine and applies plain last-write-wins — the undo/recovery
+    path (M8, Upsert.mergeMode, client/table/writer/Upsert.java:61-98).
+
+    `part` is the fold windows' partition (see the note above
+    _struct_sql), `extra_cols` ride through to the changelog, and
+    `order_cols` overrides the default engine's fold order (default
+    [__seq]; the group-commit fold passes [__grp, __seq])."""
+    engine = "default" if merge_mode == "overwrite" else schema.merge_engine
+    cols = schema.data_columns()
+    extra = list(extra_cols or [])
+    if engine == "default":
+        # DeleteBehavior.IGNORE: batch deletes drop out after __seq
+        # assignment, seed rows stay
+        where = ""
+        if schema.delete_behavior == "ignore" and may_have_deletes:
+            where = f" WHERE `{OP_COL}` != 'D' OR `{SEED_COL}` = 1"
+        rel = f"({src}){where}"
+        if partial_update_cols:
+            body = _partial_sql(rel, schema, partial_update_cols, part, extra)
+        else:
+            body = _default_sql(rel, cols, part, extra, order_cols)
+    else:
+        # the merge engines fold upserts only: a delete never reaches
+        # their state, whatever the table's delete behaviour
+        rel = f"({src}) WHERE `{OP_COL}` = 'U'"
+        if engine == "first_row":
+            body = _first_row_sql(rel, cols, part, extra)
+        elif engine == "versioned":
+            body = _versioned_sql(rel, schema, part, extra)
+        elif engine == "aggregation":
+            body = _aggregation_sql(rel, schema, partial_update_cols, part, extra)
+        else:
+            raise ValueError(f"unknown merge engine: {engine}")
+    return _changelog_image_sql(body, schema, extra, full_row=not partial_update_cols)
 
 
 def replay(
@@ -181,113 +277,64 @@ def replay(
     cluster_cols: list[str] | None = None,
     emit_prior: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
-    """Fold a change stream into (changelog_df, snapshot_df).
-
-    Dispatches on the table's merge engine (MergeEngineType.java:23-64).
-    `merge_mode='overwrite'` bypasses the merge engine and applies plain
-    last-write-wins — the undo/recovery path (M8, Upsert.mergeMode,
-    client/table/writer/Upsert.java:61-98).
+    """Fold a fold-input frame (the contract above) into (changelog_df,
+    snapshot_df) through `fold_changelog`, the compiler every commit
+    uses.
 
     `may_have_deletes=False` is a caller hint (the batch carried no __op
     column, so every op is 'U') that skips the delete-probe jobs.
-
-    `cluster_cols` / `emit_prior` are the fused-commit contract (see the
-    note above _run_over and _emit): windows additionally keyed by the
-    clustering columns, and seed rows re-emitted as NULL-change-type
-    prior rows that carry the clustering columns through.
+    `cluster_cols` prefix every fold window's partition and ride through
+    to the changelog; `emit_prior` keeps the seed's prior rows in it.
     """
-    engine = "default" if merge_mode == "overwrite" else schema.merge_engine
     pk = schema.primary_key
-    cols = schema.data_columns()
-    part = list(cluster_cols or []) + list(pk)
     if not pk:
         raise ValueError("replay requires a primary-key table")
-
-    if schema.delete_behavior == "disable" and may_have_deletes:
-        # DeleteBehavior.DISABLE (metadata/DeleteBehavior.java:28-47)
-        if df.filter(F.col(OP_COL) == "D").limit(1).count() > 0:
-            raise ValueError("DELETE disabled for this table (table.delete.behavior=disable)")
-    if schema.delete_behavior == "ignore" and may_have_deletes:
-        df = df.filter((F.col(OP_COL) != "D") | (F.col(SEED_COL) == 1))
-
-    if engine == "default":
-        if partial_update_cols:
-            has_deletes = may_have_deletes and df.filter(
-                (F.col(OP_COL) == "D") & (F.col(SEED_COL) == 0)
-            ).limit(1).count() > 0
-            if has_deletes:
-                out = replay_exact(
-                    df, schema, partial_update_cols, cluster_cols, emit_prior
-                )
-            else:
-                out = _replay_partial(df, schema, partial_update_cols, part, emit_prior)
-        else:
-            out = _replay_default(df, schema, part, emit_prior)
-        return _apply_changelog_image(
-            out, schema, full_row=not partial_update_cols, prior_rows=emit_prior
-        )
-    if engine == "first_row":
-        return _replay_first_row(df, schema, part, emit_prior)
-    if engine == "versioned":
-        return _apply_changelog_image(
-            _replay_versioned(df, schema, part, emit_prior),
-            schema, full_row=False, prior_rows=emit_prior,
-        )
-    if engine == "aggregation":
-        return _apply_changelog_image(
-            _replay_aggregation(df, schema, partial_update_cols, part, emit_prior),
-            schema, full_row=False, prior_rows=emit_prior,
-        )
-    raise ValueError(f"unknown merge engine: {engine}")
-
-
-def _apply_changelog_image(
-    out: tuple[DataFrame, DataFrame],
-    schema: TableSchema,
-    full_row: bool,
-    prior_rows: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """M9 changelog image (metadata/ChangelogImage.java): FULL keeps
-    -U/+U pairs; WAL drops UPDATE_BEFORE, and — for default merge with
-    full-row updates — converts +I to +U (the skip-old-lookup
-    optimization, 'similar to database WAL behavior'). The +I -> +U
-    shortcut is gated OFF on auto-increment tables, exactly as the
-    reference gates it on !hasAutoIncrement (KvTablet.java:723-725):
-    ids are minted at insert, so the commit path must still see which
-    events are inserts."""
-    if schema.changelog_image != "wal":
-        return out
-    changelog, snapshot = out
-    changelog = changelog.filter(wal_image_where_sql(prior_rows))
-    has_autoinc = any(f.auto_increment for f in schema.fields)
-    if schema.merge_engine == "default" and full_row and not has_autoinc:
-        changelog = changelog.withColumn(
-            CHANGE_TYPE_COL, F.expr(wal_image_ct_case_sql())
-        )
+    extra = [c for c in (cluster_cols or []) if c not in pk]
+    changelog = fold_changelog(
+        df.sparkSession,
+        "SELECT * FROM {fold_in}",
+        {"fold_in": df},
+        schema,
+        extra + list(pk),
+        extra,
+        partial_update_cols=partial_update_cols,
+        merge_mode=merge_mode,
+        delete_frames=[df] if may_have_deletes else [],
+    )
+    snapshot = _snapshot_from_changelog(changelog, schema)
+    if not emit_prior:
+        changelog = changelog.where(f"`{CHANGE_TYPE_COL}` IS NOT NULL")
     return changelog, snapshot
 
 
-def wal_image_where_sql(prior_rows: bool) -> str:
-    """WAL changelog image: drop UPDATE_BEFORE rows. NULL-safe when
-    prior rows ride the changelog (fused commit: _change_type NULL marks
-    a prior-snapshot row, which the plain != filter would silently drop
-    — data loss on the rewrite feed). Shared with the SQL fold."""
-    if prior_rows:
-        return (
-            f"(`{CHANGE_TYPE_COL}` IS NULL OR "
-            f"`{CHANGE_TYPE_COL}` != '{UPDATE_BEFORE}')"
-        )
-    return f"`{CHANGE_TYPE_COL}` != '{UPDATE_BEFORE}'"
-
-
-def wal_image_ct_case_sql() -> str:
-    """WAL image's +I -> +U shortcut ('similar to database WAL
-    behavior') for default merge with full-row updates; the caller gates
-    it off on auto-increment tables (KvTablet.java:723-725). Shared with
-    the SQL fold."""
+def _changelog_image_sql(
+    src: str, schema: TableSchema, extra_cols: list[str], full_row: bool
+) -> str:
+    """M9 changelog image (metadata/ChangelogImage.java) over changelog
+    statement `src`: FULL keeps -U/+U pairs (`src` unchanged); WAL drops
+    UPDATE_BEFORE — NULL-safe, prior rows stay — and, for default merge
+    with full-row updates, converts +I to +U (the skip-old-lookup
+    optimization, 'similar to database WAL behavior'). The shortcut
+    gates on the SCHEMA's engine (an overwrite batch to a merge-engine
+    table folds last-write-wins but keeps +I, KvTablet semantics) and is
+    OFF on auto-increment tables, exactly as the reference gates it on
+    !hasAutoIncrement (KvTablet.java:723-725): ids are minted at insert,
+    so the commit path must still see which events are inserts."""
+    if schema.changelog_image != "wal":
+        return src
+    ct = f"`{CHANGE_TYPE_COL}`"
+    has_autoinc = any(f.auto_increment for f in schema.fields)
+    if schema.merge_engine == "default" and full_row and not has_autoinc:
+        ct = f"CASE WHEN {ct} = '{INSERT}' THEN '{UPDATE_AFTER}' ELSE {ct} END"
+    select = (
+        [f"`{SEQ_COL}`"]
+        + [f"`{c}`" for c in extra_cols]
+        + [f"`{SUB_COL}`", f"{ct} AS `{CHANGE_TYPE_COL}`"]
+        + [f"`{c}`" for c in schema.data_columns()]
+    )
     return (
-        f"CASE WHEN `{CHANGE_TYPE_COL}` = '{INSERT}' THEN '{UPDATE_AFTER}' "
-        f"ELSE `{CHANGE_TYPE_COL}` END"
+        f"SELECT {', '.join(select)} FROM ({src}) WHERE "
+        f"(`{CHANGE_TYPE_COL}` IS NULL OR `{CHANGE_TYPE_COL}` != '{UPDATE_BEFORE}')"
     )
 
 
@@ -296,15 +343,14 @@ def wal_image_ct_case_sql() -> str:
 # ---------------------------------------------------------------------- #
 
 
-def default_fold_select_list(
+def _default_fold_select_list(
     cols: list[str], part: list[str], order_cols: list[str] | None = None
 ) -> list[str]:
     """Select list of the default-merge running-state layer (state
-    presence after each record). Shared by `_replay_default` and the
-    one-statement SQL fold (kv.KvStore._fold_replay_sql). `order_cols`
-    overrides the fold-order columns (default [__seq]); the group-commit
-    fold passes [__grp, __seq] so per-batch sequence numbers replay in
-    batch-major order — identical per-key frames to N sequential folds."""
+    presence after each record). `order_cols` overrides the fold-order
+    columns (default [__seq]); the group-commit fold passes
+    [__grp, __seq] so per-batch sequence numbers replay in batch-major
+    order — identical per-key frames to N sequential folds."""
     lag_over = _lag_over(part, order_cols)
     state = f"CASE WHEN `{OP_COL}` = 'U' THEN {_struct_sql(cols)} END"
     return [
@@ -316,40 +362,28 @@ def default_fold_select_list(
     ]
 
 
-def _replay_default(
-    df: DataFrame,
-    schema: TableSchema,
-    part: list[str] | None = None,
-    emit_prior: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    pk, cols = schema.primary_key, schema.data_columns()
-    part = part or pk
-    extra = [c for c in part if c not in pk]
-    d = df.selectExpr(*default_fold_select_list(cols, part))
-    changelog = _emit(
-        d,
-        cols,
-        cur_state="__cur",
-        prev_state="__prev",
-        prev_present="__prev_present",
-        emit_cond="true",
-        extra_cols=extra,
-        emit_prior=emit_prior,
-    )
-    snapshot = _final_state(d, part, cols)
-    return changelog, snapshot
+def _default_sql(
+    rel: str,
+    cols: list[str],
+    part: list[str],
+    extra: list[str],
+    order_cols: list[str] | None,
+) -> str:
+    d = f"SELECT {', '.join(_default_fold_select_list(cols, part, order_cols))} FROM {rel}"
+    return _emit_sql(d, cols, "__cur", "__prev", "__prev_present", "true", extra)
 
 
-def _final_state(d: DataFrame, part: list[str], cols: list[str]) -> DataFrame:
-    pks = ", ".join(f"`{c}`" for c in part)
-    return (
-        d.selectExpr(
-            "*",
-            f"row_number() OVER (PARTITION BY {pks} ORDER BY `{SEQ_COL}` DESC) AS __rn",
-        )
-        .filter("__rn = 1 AND __cur_present")
-        .selectExpr(*[f"__cur.`{c}` AS `{c}`" for c in cols])
-    )
+def _running_sql(
+    rel: str, running: list[str], cols: list[str], part: list[str], extra: list[str]
+) -> str:
+    """Running per-column state (`running`, one window expression per
+    column) as the __cur struct, then its lag as __prev — two layers,
+    because window functions cannot nest — then the emission. __cur is
+    a struct and never NULL, so a NULL __prev means 'no prior state'."""
+    state = "struct(" + ", ".join(running) + ")"
+    cur = f"SELECT *, {state} AS __cur FROM {rel}"
+    prev = f"SELECT *, lag(__cur) OVER ({_lag_over(part)}) AS __prev FROM ({cur})"
+    return _emit_sql(prev, cols, "__cur", "__prev", "__prev IS NOT NULL", "true", extra)
 
 
 # ---------------------------------------------------------------------- #
@@ -357,22 +391,19 @@ def _final_state(d: DataFrame, part: list[str], cols: list[str]) -> DataFrame:
 # ---------------------------------------------------------------------- #
 
 
-def _replay_partial(
-    df: DataFrame,
+def _partial_sql(
+    rel: str,
     schema: TableSchema,
     target_cols: list[str],
-    part: list[str] | None = None,
-    emit_prior: bool = False,
-) -> tuple[DataFrame, DataFrame]:
+    part: list[str],
+    extra: list[str],
+) -> str:
     """Running per-column state: target columns take the incoming value
     (explicit nulls overwrite — hence the struct wrapper that makes
     'set to null' distinguishable from 'not set'); untouched columns keep
     their last state (null before first write)."""
     pk, cols = schema.primary_key, schema.data_columns()
-    part = part or pk
-    extra = [c for c in part if c not in pk]
-    run_over, lag_over = _run_over(part), _lag_over(part)
-
+    run_over = _run_over(part)
     running = []
     for c in cols:
         if c in pk:
@@ -387,28 +418,7 @@ def _replay_partial(
                 f"(last(CASE WHEN `{SEED_COL}` = 1 THEN named_struct('v', `{c}`) END,"
                 f" true) OVER ({run_over})).v AS `{c}`"
             )
-
-    # two steps: __cur holds running-window state, so lag(__cur) must
-    # sit in its own projection (window functions cannot nest)
-    state = "struct(" + ", ".join(running) + ")"
-    d = df.selectExpr("*", f"{state} AS __cur", "true AS __cur_present")
-    d = d.selectExpr(
-        "*",
-        f"lag(__cur) OVER ({lag_over}) AS __prev",
-        f"(lag(true) OVER ({lag_over})) IS NOT NULL AS __prev_present",
-    )
-    changelog = _emit(
-        d,
-        cols,
-        cur_state="__cur",
-        prev_state="__prev",
-        prev_present="__prev_present",
-        emit_cond="true",
-        extra_cols=extra,
-        emit_prior=emit_prior,
-    )
-    snapshot = _final_state(d, part, cols)
-    return changelog, snapshot
+    return _running_sql(rel, running, cols, part, extra)
 
 
 # ---------------------------------------------------------------------- #
@@ -416,45 +426,21 @@ def _replay_partial(
 # ---------------------------------------------------------------------- #
 
 
-def _replay_first_row(
-    df: DataFrame,
-    schema: TableSchema,
-    part: list[str] | None = None,
-    emit_prior: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    pk, cols = schema.primary_key, schema.data_columns()
-    part = part or pk
-    extra = [c for c in part if c not in pk]
-    winners = (
-        df.filter(f"`{OP_COL}` = 'U'")
-        .selectExpr(
-            "*",
-            f"row_number() OVER ({_lag_over(part)}) AS __rn",
-        )
-        .filter("__rn = 1")
-    )
-    if emit_prior:
-        # one row per winner, no union (keeps the fold's partitioning):
-        # a seed winner is the key's prior-snapshot row (the first write
-        # won before this batch — no changelog event), a batch winner is
-        # the +I insert
-        changelog = winners.selectExpr(
-            f"`{SEQ_COL}`",
-            *[f"`{c}`" for c in extra],
+def _first_row_sql(rel: str, cols: list[str], part: list[str], extra: list[str]) -> str:
+    """One row per key, its first upsert: a seed winner is the key's
+    prior-snapshot row (the first write won before this batch — no
+    changelog event), a batch winner is the +I insert."""
+    ranked = f"SELECT *, row_number() OVER ({_lag_over(part)}) AS __rn FROM {rel}"
+    select = (
+        [f"`{SEQ_COL}`"]
+        + [f"`{c}`" for c in extra]
+        + [
             f"CASE WHEN `{SEED_COL}` = 1 THEN -1 ELSE 0 END AS `{SUB_COL}`",
             f"CASE WHEN `{SEED_COL}` = 0 THEN '{INSERT}' END AS `{CHANGE_TYPE_COL}`",
-            *[f"`{c}`" for c in cols],
-        )
-    else:
-        changelog = winners.filter(f"`{SEED_COL}` = 0").selectExpr(
-            f"`{SEQ_COL}`",
-            *[f"`{c}`" for c in extra],
-            f"0 AS `{SUB_COL}`",
-            f"'{INSERT}' AS `{CHANGE_TYPE_COL}`",
-            *[f"`{c}`" for c in cols],
-        )
-    snapshot = winners.select(*cols)
-    return changelog, snapshot
+        ]
+        + [f"`{c}`" for c in cols]
+    )
+    return f"SELECT {', '.join(select)} FROM ({ranked}) WHERE __rn = 1"
 
 
 # ---------------------------------------------------------------------- #
@@ -462,20 +448,11 @@ def _replay_first_row(
 # ---------------------------------------------------------------------- #
 
 
-def _replay_versioned(
-    df: DataFrame,
-    schema: TableSchema,
-    part: list[str] | None = None,
-    emit_prior: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    pk, cols = schema.primary_key, schema.data_columns()
-    part = part or pk
-    extra = [c for c in part if c not in pk]
+def _versioned_sql(rel: str, schema: TableSchema, part: list[str], extra: list[str]) -> str:
+    cols = schema.data_columns()
     ver = schema.version_column
     if not ver:
         raise ValueError("versioned merge engine requires table.merge-engine.versioned.ver-column")
-    run_over, lag_over = _run_over(part), _lag_over(part)
-
     # ranking key: (version with null -> -inf, then arrival order so the
     # newer write wins ties) — exactly createVersionComparator + new-wins
     rank = (
@@ -484,29 +461,19 @@ def _replay_versioned(
     )
     payload = f"named_struct('k', {rank}, 'row', {_struct_sql(cols)})"
     # struct compare = lexicographic (v, s)
-    d = df.filter(f"`{OP_COL}` = 'U'").selectExpr(
-        "*", f"max({payload}) OVER ({run_over}) AS __w"
-    )
-    d = d.selectExpr(
-        "*",
-        "__w.row AS __cur",
-        "true AS __cur_present",
-        f"lag(__w) OVER ({lag_over}) AS __prev_w",
-    ).selectExpr("*", "__prev_w.row AS __prev", "__prev_w IS NOT NULL AS __prev_present")
-    changelog = _emit(
-        d,
+    win = f"SELECT *, max({payload}) OVER ({_run_over(part)}) AS __w FROM {rel}"
+    prev = f"SELECT *, lag(__w) OVER ({_lag_over(part)}) AS __prev_w FROM ({win})"
+    return _emit_sql(
+        prev,
         cols,
-        cur_state="__cur",
-        prev_state="__prev",
-        prev_present="__prev_present",
+        cur_state="__w.row",
+        prev_state="__prev_w.row",
+        prev_present="__prev_w IS NOT NULL",
         # emit only when this record became the winner (its seq is the
         # winner seq)
         emit_cond=f"__w.k.s = `{SEQ_COL}`",
-        extra_cols=extra,
-        emit_prior=emit_prior,
+        extra=extra,
     )
-    snapshot = _final_state(d, part, cols)
-    return changelog, snapshot
 
 
 # ---------------------------------------------------------------------- #
@@ -541,6 +508,8 @@ def _agg_running(c: str, agg: str, run_over: str, delim: str = ",", dtype: str =
     if agg in ("listagg", "string_agg"):
         lst = f"collect_list({col}) OVER ({run_over})"  # skips nulls, offset order
         dq = delim.replace("\\", "\\\\").replace("'", "\\'")
+        # the statement runs through spark.sql's {name} formatter
+        dq = dq.replace("{", "{{").replace("}", "}}")
         return f"CASE WHEN size({lst}) > 0 THEN array_join({lst}, '{dq}') END"
     if agg == "bool_and":
         return f"min({col}) OVER ({run_over})"
@@ -554,13 +523,13 @@ def _agg_running(c: str, agg: str, run_over: str, delim: str = ",", dtype: str =
     raise ValueError(f"unknown aggregate function: {agg}")
 
 
-def _replay_aggregation(
-    df: DataFrame,
+def _aggregation_sql(
+    rel: str,
     schema: TableSchema,
-    partial_update_cols: list[str] | None = None,
-    part: list[str] | None = None,
-    emit_prior: bool = False,
-) -> tuple[DataFrame, DataFrame]:
+    partial_update_cols: list[str] | None,
+    part: list[str],
+    extra: list[str],
+) -> str:
     """AGGREGATION merge; with `partial_update_cols` only target columns
     take the batch's contributions, untouched columns carry the seed's
     accumulated value (PartialAggregateRowMerger,
@@ -568,12 +537,10 @@ def _replay_aggregation(
     identically either way; last_value/first_value need the explicit
     carry so a partial batch's nulls don't overwrite."""
     pk, cols = schema.primary_key, schema.data_columns()
-    part = part or pk
-    extra = [c for c in part if c not in pk]
     agg_spec = schema.agg_spec
     delim = schema.properties.get("table.merge-engine.aggregation.listagg-delimiter", ",")
-    run_over, lag_over = _run_over(part), _lag_over(part)
-    dtypes = dict(df.dtypes)
+    run_over = _run_over(part)
+    dtypes = {f.name: parse_type(f.type).simpleString() for f in schema.fields}
     target = set(partial_update_cols) if partial_update_cols else None
 
     running = []
@@ -588,8 +555,7 @@ def _replay_aggregation(
             )
         elif c in agg_spec:
             running.append(
-                f"{_agg_running(c, agg_spec[c], run_over, delim, dtypes.get(c, 'double'))}"
-                f" AS `{c}`"
+                f"{_agg_running(c, agg_spec[c], run_over, delim, dtypes[c])} AS `{c}`"
             )
         else:
             # non-aggregated column: last value wins (AggregateRowMerger
@@ -597,30 +563,7 @@ def _replay_aggregation(
             running.append(
                 f"(last(named_struct('v', `{c}`)) OVER ({run_over})).v AS `{c}`"
             )
-
-    state = "struct(" + ", ".join(running) + ")"
-    d = df.filter(f"`{OP_COL}` = 'U'").selectExpr(
-        "*",
-        f"{state} AS __cur",
-        "true AS __cur_present",
-    )
-    d = d.selectExpr(
-        "*",
-        f"lag(__cur) OVER ({lag_over}) AS __prev",
-        f"(lag(true) OVER ({lag_over})) IS NOT NULL AS __prev_present",
-    )
-    changelog = _emit(
-        d,
-        cols,
-        cur_state="__cur",
-        prev_state="__prev",
-        prev_present="__prev_present",
-        emit_cond="true",
-        extra_cols=extra,
-        emit_prior=emit_prior,
-    )
-    snapshot = _final_state(d, part, cols)
-    return changelog, snapshot
+    return _running_sql(rel, running, cols, part, extra)
 
 
 # ---------------------------------------------------------------------- #
@@ -632,23 +575,22 @@ def replay_exact(
     df: DataFrame,
     schema: TableSchema,
     partial_update_cols: list[str] | None = None,
-    cluster_cols: list[str] | None = None,
-    emit_prior: bool = False,
-) -> tuple[DataFrame, DataFrame]:
+    extra_cols: list[str] | None = None,
+) -> DataFrame:
     """Per-key sequential fold via applyInPandas (Arrow-batched, grouped
     by pk — distributed, but row-at-a-time inside each key). Used only
     for partial-update+delete mixtures; semantics from
     PartialUpdater.updateRow/deleteRow (PartialUpdater.java:35-138):
     delete retracts target columns, the row dies when every non-pk
-    column is null. `cluster_cols`/`emit_prior` follow the fused-commit
-    contract (see replay): clustering columns ride through the output
-    and seed rows re-emit as NULL-change-type prior rows."""
+    column is null. Returns the changelog in the window fold's shape:
+    `extra_cols` ride through and seed rows re-emit as NULL-change-type
+    prior rows."""
     import pandas as pd
 
     pk, cols = schema.primary_key, schema.data_columns()
     non_pk = [c for c in cols if c not in pk]
     target = [c for c in (partial_update_cols or cols) if c not in pk]
-    extra = [c for c in (cluster_cols or []) if c not in pk]
+    extra = list(extra_cols or [])
 
     out_schema = ", ".join(
         [f"`{SEQ_COL}` long"]
@@ -667,10 +609,7 @@ def replay_exact(
             is_seed = rec[SEED_COL] == 1
             if is_seed:
                 state = {c: rec[c] for c in cols}
-                if emit_prior:
-                    rows.append(
-                        {SEQ_COL: 0, **ex, SUB_COL: -1, CHANGE_TYPE_COL: None, **state}
-                    )
+                rows.append({SEQ_COL: 0, **ex, SUB_COL: -1, CHANGE_TYPE_COL: None, **state})
                 continue
             seq = rec[SEQ_COL]
             if rec[OP_COL] == "U":
@@ -701,19 +640,19 @@ def replay_exact(
                     rows.append({SEQ_COL: seq, **ex, SUB_COL: 1, CHANGE_TYPE_COL: UPDATE_AFTER, **state})
         return pd.DataFrame(rows, columns=[SEQ_COL, *extra, SUB_COL, CHANGE_TYPE_COL, *cols])
 
-    changelog = df.groupBy(*pk).applyInPandas(fold, schema=out_schema)
-    snapshot = _snapshot_from_changelog(changelog, schema)
-    return changelog, snapshot
+    return df.groupBy(*pk).applyInPandas(fold, schema=out_schema)
 
 
 def _snapshot_from_changelog(changelog: DataFrame, schema: TableSchema) -> DataFrame:
     """Replay invariant: applying a changelog reproduces the snapshot —
     last event per key wins; keys whose last event is -D are gone
-    (SortMergeReader.java:30-55 'change log wins over the snapshot')."""
+    (SortMergeReader.java:30-55 'change log wins over the snapshot').
+    A prior row (NULL change type) that is still last is the key's
+    untouched state."""
     pk, cols = schema.primary_key, schema.data_columns()
     w = Window.partitionBy(*pk).orderBy(F.col(SEQ_COL).desc(), F.col(SUB_COL).desc())
     return (
         changelog.withColumn("__rn", F.row_number().over(w))
-        .filter((F.col("__rn") == 1) & (F.col(CHANGE_TYPE_COL) != DELETE))
+        .filter((F.col("__rn") == 1) & ~F.col(CHANGE_TYPE_COL).eqNullSafe(DELETE))
         .select(*cols)
     )

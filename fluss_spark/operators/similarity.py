@@ -1439,7 +1439,8 @@ def _pq_train_pack_spark(spark: SparkSession, e: DataFrame, cache_key=None):
     """The original whole-plan trainer (exploded assign -> groupBy
     update -> assign -> groupBy pack): retained as the INDEPENDENT
     equivalence baseline the kernel trainer above is pinned against
-    (the _commit_twopass pattern). Not on the production path."""
+    (the pattern of the two-pass commit baseline). Not on the production
+    path."""
     if cache_key is not None and cache_key in _PQ_TRAIN_CACHE:
         return _PQ_TRAIN_CACHE[cache_key]
     import numpy as np

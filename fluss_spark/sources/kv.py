@@ -7,10 +7,14 @@ to the WAL; KV snapshots upload per-tablet and only changed tablets
 produce new files (server/kv/snapshot/). Here one deterministic
 transaction does all of it set-at-a-time:
 
-  1. seed   = snapshot rows of the BATCH's buckets, semi-joined to the
-              batch's keys (the distributed read-old; O(batch), not
-              O(table))
-  2. fold   = operators/replay.py window fold over seed ∪ batch
+  1. seed   = snapshot rows of the BATCH's buckets (the distributed
+              read-old; O(batch buckets), not O(table)) — all of them,
+              since they also feed the snapshot rewrite; deferred
+              (WAL-only) commits semi-join them to the batch's keys
+  2. fold   = ONE spark.sql statement, seed ∪ batch → per-key __seq →
+              merge-engine window fold (operators/replay.py) → change
+              events + the seed re-emitted as prior rows, for every
+              merge engine, partial update and changelog image
   3. ONE write action produces BOTH commit artifacts as sibling
      partition dirs (__dest=w -> WAL, __dest=s -> snapshot): a single
      bucket-window pass assigns per-bucket __offset to the change
@@ -40,9 +44,8 @@ metadata/TableBucket.java) emit partition dirs on BOTH siblings —
 `__dest=s/<part>/__bucket=` gives pk snapshots partition-directory
 pruning; auto-increment tables pre-assign their id segments
 driver-side from a persisted fold (one tiny count job) and stamp ids
-inside the same commit window. The retained two-pass path
-(`_commit_twopass`) exists as the equivalence baseline the test suite
-compares against, not as a production route.
+inside the same commit window. The test suite compares every layout
+against an independent two-pass baseline (tests/twopass_baseline.py).
 """
 
 from __future__ import annotations
@@ -61,7 +64,7 @@ from fluss_spark.operators.replay import (
     SEED_COL,
     SEQ_COL,
     SUB_COL,
-    replay,
+    fold_changelog,
 )
 from fluss_spark.sources.log import LogStore
 from fluss_spark.types import (
@@ -376,8 +379,9 @@ class KvStore:
                     "included in partial-update target columns"
                 )
 
+        eager = schema.defer_commits <= 1
         if (
-            int(schema.properties.get("table.snapshot.defer-commits", "1") or "1") <= 1
+            eager
             and self._tail_start(self.catalog.current_commit(self.db, self.table))
             is not None
         ):
@@ -395,37 +399,15 @@ class KvStore:
         # window write) where AQE's stage-by-stage replanning is pure
         # driver latency. Deferred tables keep the session setting — a
         # cadence materialize() runs a real join that AQE should plan.
-        defer = int(schema.properties.get("table.snapshot.defer-commits", "1") or "1")
-        fused = defer <= 1  # single-action commit: fold + rewrite share ONE exchange
-        if defer <= 1:
+        if eager:
             _aqe_off_enter(spark)
         try:
-            if fused and self._fold_replay_sql_ok(df, partial_update_cols, merge_mode):
-                # one-statement fold+replay: one JVM analysis instead of
-                # seven per-layer analyses (guide §7.3 driver latency)
-                changelog, batch_buckets, pair_scope, prior = self._fold_replay_sql(
-                    spark, df, ordering, batch_buckets
-                )
-            else:
-                fold_in, may_have_deletes, batch_buckets, pair_scope, prior = self._fold_input(
-                    spark, df, ordering, batch_buckets, fused=fused
-                )
-
-                changelog, _ = replay(
-                    fold_in,
-                    schema,
-                    partial_update_cols=partial_update_cols,
-                    merge_mode=merge_mode,
-                    may_have_deletes=may_have_deletes,
-                    cluster_cols=[BUCKET_COL] if fused else None,
-                    emit_prior=fused,
-                )
-            return self._commit_changelog(
-                spark, changelog, commit_ts_ms, batch_buckets, pair_scope, prior,
-                prior_included=fused,
+            changelog = self._fold(
+                spark, df, ordering, batch_buckets, partial_update_cols, merge_mode
             )
+            return self._commit_changelog(spark, changelog, commit_ts_ms)
         finally:
-            if defer <= 1:
+            if eager:
                 _aqe_off_exit(spark)
 
     def upsert_many(
@@ -454,9 +436,11 @@ class KvStore:
             to them folds the offset-bounded changelog slice and returns
             the exact same rows, trading a tail fold at read time for
             N-1 saved write actions + snapshot rewrites.
-        Shapes the single-statement fold does not cover (non-default
-        merge engines, partial updates, auto-increment id packing, a
-        pending deferred tail) fall back to sequential upserts."""
+        Shapes the group path does not take fall back to sequential
+        upserts: deferred tables (WAL-only commits), non-default merge
+        engines, auto-increment id packing, a pending deferred tail, and
+        batches that may delete on a DELETE-disabled table (the
+        sequential path keeps the commits before the refused batch)."""
         batches = [b for b in batches]
         if not batches:
             raise ValueError("upsert_many requires at least one batch")
@@ -470,12 +454,15 @@ class KvStore:
             one = int(time.time() * 1000) if commit_ts_ms is None else int(commit_ts_ms)
             ts_list = [one] * len(batches)
         schema = self.schema
-        defer = int(schema.properties.get("table.snapshot.defer-commits", "1") or "1")
         groupable = (
             len(batches) > 1
-            and defer <= 1
+            and schema.defer_commits <= 1
+            and schema.merge_engine == "default"
             and not any(f.auto_increment for f in schema.fields)
-            and all(self._fold_replay_sql_ok(b, None, None) for b in batches)
+            and not (
+                schema.delete_behavior == "disable"
+                and any(OP_COL in b.columns for b in batches)
+            )
             # a pending WAL tail means the serial path must materialize
             # first — keep that logic in one place (upsert)
             and self._tail_start(self.catalog.current_commit(self.db, self.table))
@@ -492,13 +479,8 @@ class KvStore:
         spark = batches[0].sparkSession
         _aqe_off_enter(spark)
         try:
-            changelog, batch_buckets, pair_scope, prior = self._fold_replay_sql(
-                spark, batches, ordering, batch_buckets
-            )
-            return self._commit_group(
-                spark, changelog, ts_list, batch_buckets, pair_scope, prior,
-                len(batches),
-            )
+            changelog = self._fold(spark, batches, ordering, batch_buckets)
+            return self._commit_group(spark, changelog, ts_list, len(batches))
         finally:
             _aqe_off_exit(spark)
 
@@ -564,7 +546,7 @@ class KvStore:
                 "optimistic commits are not supported on auto-increment "
                 "tables (the id counter is table-global)"
             )
-        if int(schema.properties.get("table.snapshot.defer-commits", "1") or "1") > 1:
+        if schema.defer_commits > 1:
             raise ValueError(
                 "optimistic commits require eager materialization "
                 "(table.snapshot.defer-commits <= 1)"
@@ -584,30 +566,13 @@ class KvStore:
                     "optimistic commit refused: a deferred WAL tail is "
                     "pending — materialize() first"
                 )
-            if self._fold_replay_sql_ok(df, partial_update_cols, merge_mode):
-                changelog, buckets0, pair_scope, prior = self._fold_replay_sql(
-                    spark, df, ordering, batch_buckets
-                )
-            else:
-                fold_in, may_have_deletes, buckets0, pair_scope, prior = self._fold_input(
-                    spark, df, ordering, batch_buckets, fused=True
-                )
-                changelog, _ = replay(
-                    fold_in,
-                    schema,
-                    partial_update_cols=partial_update_cols,
-                    merge_mode=merge_mode,
-                    may_have_deletes=may_have_deletes,
-                    cluster_cols=[BUCKET_COL],
-                    emit_prior=True,
-                )
+            changelog = self._fold(
+                spark, df, ordering, batch_buckets, partial_update_cols, merge_mode
+            )
             ts_ms = (
                 commit_ts_ms if commit_ts_ms is not None else int(time.time() * 1000)
             )
-            out, persisted, _auto = self._commit_plan(
-                spark, changelog, ts_ms, buckets0, pair_scope, state0, prior,
-                prior_included=True,
-            )
+            out, persisted, _auto = self._commit_plan(changelog, ts_ms, state0)
             combined = os.path.join(
                 self.log.tmp_dir, f"inflight-{uuid.uuid4().hex[:12]}"
             )
@@ -721,111 +686,105 @@ class KvStore:
             shutil.rmtree(bdir)
             os.rename(tmp, bdir)
 
-    def _fold_input(
+    def _fold(
         self,
         spark: SparkSession,
-        df: DataFrame,
+        df: DataFrame | list[DataFrame],
         ordering: list[str] | None,
-        known_buckets: list[int] | None = None,
-        fused: bool = False,
-    ):
-        """Build the fold input (seed ∪ batch, with per-key __seq) so the
-        whole upsert fold costs ONE hash exchange
-        (tests/test_plans.py pins this on the full path).
+        known_buckets: list[int] | None,
+        partial_update_cols: list[str] | None = None,
+        merge_mode: str | None = None,
+    ) -> DataFrame:
+        """The commit's changelog — seed ∪ batch(es) → __seq → engine
+        fold → changelog image — as ONE spark.sql statement for every
+        merge engine, partial update, delete behaviour and changelog
+        image: operators/replay.fold_changelog nests the fold over the
+        fold-input statement built here, so the driver analyzes the tree
+        once per commit (guide §7.3 driver latency; tests/test_plans.py
+        pins the plan shape).
 
-        `fused=False` (the WAL-only/deferred shape): the seed is the
-        bounded snapshot SEMI-JOINED to the batch's keys, __seq windows
-        partition by pk, and the fold's exchange is a pk hash — the
-        commit feeds the prior snapshot separately.
-
-        `fused=True` (the single-action commit shape): the seed is the
+        Eager tables (the single-action commit shape): the seed is the
         WHOLE bounded snapshot (every row of the batch's buckets/pairs —
         exactly the rows the snapshot rewrite must feed anyway), a
-        `__bucket` column is materialized, and the frame is hash-
-        partitioned by bucket BEFORE the fold. Every window downstream —
-        the __seq assignment here, the replay fold, the commit's offset/
-        is-last/id-carry windows (all PARTITION BY __bucket[, pk], and
-        bucket = pmod(hash(pk), n) is a function of the pk) — is
-        satisfied by that single num_buckets-wide exchange: the whole
-        upsert transaction becomes scan → ONE exchange → windows →
-        write, with no seed semi-join/broadcast and the snapshot read
-        once instead of twice (guide §2.4)."""
+        `__bucket` column is materialized in both union branches, and
+        the union is hash-partitioned by bucket BEFORE the fold. Every
+        window downstream — the __seq assignment, the fold, the commit's
+        offset/is-last/id-carry windows (all PARTITION BY __bucket[, pk],
+        and bucket = pmod(hash(pk), n) is a function of the pk) — is
+        satisfied by that single num_buckets-wide exchange: scan → ONE
+        exchange → windows → write, with the snapshot read once and its
+        rows re-emitted by the fold as the commit's prior-row feed.
+
+        Deferred tables (WAL-only commits): the seed is the bounded
+        snapshot SEMI-JOINED to the batch's keys, the windows partition
+        by pk, and the changelog carries the change events only.
+
+        `df` may be a LIST of batches (group commit, see upsert_many):
+        each batch is projected with its index as `__grp` (seed rows
+        -1), per-batch `__seq` restarts at 1 (PARTITION BY ..., __grp),
+        and every fold/emission window orders by (__grp, __seq) — the
+        per-key frames are then exactly the concatenation of N
+        sequential folds, so the emitted change rows are identical."""
         schema = self.schema
         pk, cols = schema.primary_key, schema.data_columns()
-        # normalize the batch: every data column present (nulls for
-        # non-target), __op. The per-key fold sequence (__seq) is NOT
-        # assigned here: a window on the bare batch would cost its own pk
-        # exchange, and the union with the seed below discards the
-        # partitioning, forcing the fold to exchange AGAIN. Instead the
-        # ordering columns ride along and __seq is computed after the
-        # union, inside the fold's single pk exchange.
-        b = df
-        may_have_deletes = OP_COL in b.columns  # no __op => all upserts
-        if ordering:
-            ord_names = [c for c in ordering]
-        else:
-            b = b.withColumn("__arrival", F.monotonically_increasing_id())
-            ord_names = ["__arrival"]
+        dfs = df if isinstance(df, list) else [df]
+        grouped = len(dfs) > 1
+        eager = schema.defer_commits <= 1
+        ord_names = list(ordering) if ordering else ["__arrival"]
         ord_extra = [c for c in ord_names if c not in cols]
-        # ONE projection (a per-field withColumn loop costs a full plan
-        # copy + re-analysis per column — pure driver latency per commit),
-        # built directly in output order so no reorder select follows
-        have = set(b.columns)
-        # parse_type().simpleString() = Spark-SQL DDL (the schema's own
-        # type strings are engine DDL — e.g. BYTES — which CAST rejects)
         ftype = {f.name: f.type for f in schema.fields}
-        proj = [
-            (
-                f"CAST(`{c}` AS {parse_type(ftype[c]).simpleString()}) AS `{c}`"
-                if c in have
-                else f"CAST(NULL AS {parse_type(ftype[c]).simpleString()}) AS `{c}`"
-            )
-            for c in cols
-        ]
-        proj.append(f"`{OP_COL}`" if may_have_deletes else f"'U' AS `{OP_COL}`")
-        proj.append(f"0 AS `{SEED_COL}`")
-        proj += [f"`{c}`" for c in ord_extra]
-        if fused:
-            # __bucket rides this projection (over the CAST key values,
-            # identical to hashing the post-union columns) instead of a
-            # separate post-union selectExpr: every transformation layer
-            # costs an eager re-analysis of the whole accumulated plan,
-            # so the fused chain materializes the column in BOTH union
-            # branches and drops the extra layer
-            cast_of = {
-                c: f"CAST(`{c}` AS {parse_type(ftype[c]).simpleString()})"
-                if c in have
-                else f"CAST(NULL AS {parse_type(ftype[c]).simpleString()})"
-                for c in schema.bucket_keys
-            }
-            keys_sql = ", ".join(cast_of[c] for c in schema.bucket_keys)
-            proj.append(
-                f"CAST(pmod(hash({keys_sql}), {schema.num_buckets}) AS INT)"
-                f" AS `{BUCKET_COL}`"
-            )
-        b = b.selectExpr(*proj)
 
-        # read-old restricted to the batch's buckets and keys; on a table
-        # with no state yet (first commit) there is nothing to read, so
-        # the batch-bucket discovery job is skipped entirely. Under
-        # deferred materialization the state may live partly (or, before
-        # the first materialization, entirely) in the WAL tail — the
-        # hybrid snapshot() serves it, so "has state" must consider the
-        # tail, not just the manifest.
+        def _cast_sql_for(d: DataFrame) -> dict[str, str]:
+            have = set(d.columns)
+            return {
+                c: (
+                    f"CAST(`{c}` AS {parse_type(ftype[c]).simpleString()})"
+                    if c in have
+                    else f"CAST(NULL AS {parse_type(ftype[c]).simpleString()})"
+                )
+                for c in cols
+            }
+
+        cast_sqls = [_cast_sql_for(d) for d in dfs]
+
+        # batch projection: every data column (nulls for non-target),
+        # __op, and the ordering columns; the per-key __seq is computed
+        # after the union, inside the fold's own exchange, from the
+        # ordering columns (arrival order when none is given)
+        def _bproj_for(d: DataFrame, cast_sql: dict[str, str], g: int) -> list[str]:
+            bproj = [f"{cast_sql[c]} AS `{c}`" for c in cols]
+            bproj.append(
+                f"`{OP_COL}`" if OP_COL in d.columns else f"'U' AS `{OP_COL}`"
+            )
+            bproj.append(f"0 AS `{SEED_COL}`")
+            for c in ord_extra:
+                bproj.append(
+                    "monotonically_increasing_id() AS `__arrival`"
+                    if c == "__arrival"
+                    else f"`{c}`"
+                )
+            if eager:
+                keys_sql = ", ".join(cast_sql[c] for c in schema.bucket_keys)
+                bproj.append(
+                    f"CAST(pmod(hash({keys_sql}), {schema.num_buckets}) AS INT)"
+                    f" AS `{BUCKET_COL}`"
+                )
+            if grouped:
+                bproj.append(f"CAST({g} AS INT) AS `{GRP_COL}`")
+            return bproj
+
+        # write scope: skip on first commit (under deferred
+        # materialization the state may live partly, or entirely, in
+        # the WAL tail), trust a caller-known superset, else one
+        # map-side discovery job over a minimal CAST key/partition frame
+        # (the union of all batches' keys under group commit). It bounds
+        # the seed read, and with it the commit's prior-row feed, to the
+        # batch's buckets — or (partition, bucket) pairs — never O(table)
         state_now = self.catalog.current_commit(self.db, self.table)
         manifest_now = self._manifest(state_now.snapshot_version)
-        has_snapshot = bool(manifest_now) or self._tail_start(state_now) is not None
-        # batch-bucket discovery ALWAYS runs when a snapshot exists: the
-        # single-action commit feeds the prior snapshot of these buckets
-        # straight into its bucket window with no key semi-join, so an
-        # unbounded feed would shuffle O(table) per commit. The discovery
-        # collect is one tiny job (<= num_buckets rows) and also prunes
-        # the seed read's dir/footer walk. A caller that already knows a
-        # superset of the batch's buckets passes it in and skips the job.
-        # Partitioned tables discover (partition values, bucket) PAIRS:
-        # the typed pair predicate bounds the seed and the prior feed to
-        # the batch's partitions too (directory pruning), capped at 512
-        # pairs so a corpus-wide backfill doesn't explode the plan.
+        has_snapshot = (
+            bool(manifest_now) or self._tail_start(state_now) is not None
+        )
         pair_pred = None
         pair_keys = None
         if not has_snapshot:
@@ -833,86 +792,112 @@ class KvStore:
         elif known_buckets is not None:
             batch_buckets = [int(x) for x in known_buckets]
         else:
-            batch_buckets, pair_pred, pair_keys = self._discover_scope(
-                b, manifest_now
+            disc_cols = list(
+                dict.fromkeys(list(schema.bucket_keys) + list(schema.partition_keys))
             )
-        # no .distinct() on the probe side: a semi join dedups by
-        # definition, and the distinct would cost its own exchange + agg
-        ord_types = dict(b.dtypes)
-        # ONE bounded-snapshot frame serves both the seed probe here and
-        # the commit's prior-row feed (_commit_plan reuses it instead of
-        # re-deriving an identical plan — one snapshot analysis per
-        # commit, and seed + prior feed are guaranteed the same basis)
+            bdisc = reduce(
+                DataFrame.unionByName,
+                [
+                    d.selectExpr(*[f"{cs[c]} AS `{c}`" for c in disc_cols])
+                    for d, cs in zip(dfs, cast_sqls)
+                ],
+            )
+            batch_buckets, pair_pred, pair_keys = self._discover_scope(
+                bdisc, manifest_now
+            )
+
         bounded = self.snapshot(
             spark, buckets=batch_buckets, pair_pred=pair_pred, pair_keys=pair_keys
         )
-        if fused:
-            # the whole bounded snapshot rides the fold (no semi-join):
-            # untouched keys' rows become the prior-row feed the commit
-            # needs anyway (replay re-emits them with a NULL change type);
-            # __bucket is materialized here too (see the batch projection
-            # above) so the union needs no trailing bucket layer
-            seed = bounded.selectExpr(
-                "*",
-                f"'U' AS `{OP_COL}`",
-                f"1 AS `{SEED_COL}`",
-                *[f"CAST(NULL AS {ord_types[c]}) AS `{c}`" for c in ord_extra],
-                f"{self._bucket_sql()} AS `{BUCKET_COL}`",
+
+        # seed projection — column-for-column the batch projection's
+        # order (UNION ALL aligns by position)
+        df_types = dict(dfs[0].dtypes)
+        sproj = (
+            [f"`{c}`" for c in cols]
+            + [f"'U' AS `{OP_COL}`", f"1 AS `{SEED_COL}`"]
+            + [
+                f"CAST(NULL AS {'bigint' if c == '__arrival' else df_types.get(c, 'bigint')}) AS `{c}`"
+                for c in ord_extra
+            ]
+            + ([f"{self._bucket_sql()} AS `{BUCKET_COL}`"] if eager else [])
+            + ([f"CAST(-1 AS INT) AS `{GRP_COL}`"] if grouped else [])
+        )
+
+        def _ph(g: int) -> str:
+            return "batch" if not grouped else f"b{g}"
+
+        seed_rel = "{snap}"
+        if not eager:
+            # read-old bounded to the batch's keys (a semi join dedups by
+            # definition: no distinct, no extra exchange + aggregate)
+            keys = " UNION ALL ".join(
+                f"SELECT {', '.join(f'{cs[c]} AS `{c}`' for c in pk)} FROM {{{_ph(g)}}}"
+                for g, cs in enumerate(cast_sqls)
             )
-        else:
-            seed = (
-                bounded
-                .join(b.select(*pk), on=pk, how="left_semi")
-                .selectExpr(
-                    "*",
-                    f"'U' AS `{OP_COL}`",
-                    f"1 AS `{SEED_COL}`",
-                    # seed rows sort first by SEED, ord is moot
-                    *[f"CAST(NULL AS {ord_types[c]}) AS `{c}`" for c in ord_extra],
-                )
+            pk_sql = ", ".join(f"`{c}`" for c in pk)
+            seed_rel += f" LEFT SEMI JOIN ({keys}) USING ({pk_sql})"
+        union_sql = f"SELECT {', '.join(sproj)} FROM {seed_rel}" + "".join(
+            f" UNION ALL SELECT {', '.join(_bproj_for(d, cs, g))} FROM {{{_ph(g)}}}"
+            for g, (d, cs) in enumerate(zip(dfs, cast_sqls))
+        )
+        extra = [BUCKET_COL] if eager else []
+        part = extra + list(pk)
+        if eager:
+            # the transaction's ONE exchange, sized to the table's bucket
+            # count (same node as DataFrame.repartition(n, __bucket))
+            union_sql = (
+                f"SELECT /*+ REPARTITION({schema.num_buckets}, `{BUCKET_COL}`) */ *"
+                f" FROM ({union_sql})"
             )
-        # a union aligns BY NAME and seed's column set equals b's, so no
-        # reorder select on either side
-        fold_in = seed.unionByName(b)
-        part_sql = ", ".join(f"`{c}`" for c in pk)
-        if fused:
-            # __bucket arrived with both union branches; establish the
-            # transaction's ONE exchange here — every downstream window
-            # is keyed by __bucket[, pk] and reuses it
-            fold_in = fold_in.repartition(schema.num_buckets, F.col(BUCKET_COL))
-            part_sql = f"`{BUCKET_COL}`, " + part_sql
-        # __seq inside the fold's own exchange: seed first (SEED desc),
-        # then batch rows in `ordering` order. Batch rows number 1.. per
-        # key whether or not a seed row exists (sum(SEED) over the key =
-        # presence); seed rows pin __seq=0 — identical semantics to the
-        # old pre-union row_number window, minus one full-batch exchange.
-        # ONE projection computes __seq and drops the ordering columns.
+        if grouped:
+            extra.append(GRP_COL)
+        # per-batch __seq: under group commit the numbering partition
+        # additionally keys on __grp, so each batch's rows restart at 1
+        # per key — the sequential commits' numbering exactly
+        part_sql = ", ".join(
+            f"`{c}`" for c in part + ([GRP_COL] if grouped else [])
+        )
+        # seed first (SEED desc), then batch rows in `ordering` order:
+        # batch rows number 1.. per key whether or not a seed row exists
+        # (sum(SEED) over the key = presence); seed rows pin __seq=0
         ord_sql = ", ".join(
             [f"`{SEED_COL}` DESC"] + [f"`{c}` ASC NULLS FIRST" for c in ord_names]
         )
-        fold_in = fold_in.selectExpr(
-            *[f"`{c}`" for c in cols],
-            f"`{OP_COL}`",
-            f"CAST(CASE WHEN `{SEED_COL}` = 1 THEN 0 ELSE "
-            f"row_number() OVER (PARTITION BY {part_sql} ORDER BY {ord_sql}) "
-            f"- sum(`{SEED_COL}`) OVER (PARTITION BY {part_sql}) END AS BIGINT) "
-            f"AS `{SEQ_COL}`",
-            f"`{SEED_COL}`",
-            *([f"`{BUCKET_COL}`"] if fused else []),
+        seq_select = (
+            [f"`{c}`" for c in cols]
+            + [
+                f"`{OP_COL}`",
+                f"CAST(CASE WHEN `{SEED_COL}` = 1 THEN 0 ELSE "
+                f"row_number() OVER (PARTITION BY {part_sql} ORDER BY {ord_sql}) "
+                f"- sum(`{SEED_COL}`) OVER (PARTITION BY {part_sql}) END AS BIGINT) "
+                f"AS `{SEQ_COL}`",
+                f"`{SEED_COL}`",
+            ]
+            + [f"`{c}`" for c in extra]
         )
-        pair_scope = (
-            (pair_pred, pair_keys)
-            if (pair_pred is not None or pair_keys is not None)
-            else None
+        fold_sql = f"SELECT {', '.join(seq_select)} FROM ({union_sql})"
+        frames = {"snap": bounded}
+        frames.update({_ph(g): d for g, d in enumerate(dfs)})
+        return fold_changelog(
+            spark,
+            fold_sql,
+            frames,
+            schema,
+            part,
+            extra,
+            order_cols=[GRP_COL, SEQ_COL] if grouped else None,
+            partial_update_cols=partial_update_cols,
+            merge_mode=merge_mode,
+            delete_frames=[d for d in dfs if OP_COL in d.columns],
+            prior_rows=eager,
         )
-        return fold_in, may_have_deletes, batch_buckets, pair_scope, bounded
 
     def _discover_scope(self, b: DataFrame, manifest_now):
         """Batch write scope — (bucket list, typed pair predicate,
         manifest pair keys) — from a normalized batch frame `b` (CAST
         key/partition columns present under their schema names). ONE
-        map-side collect_set job. Shared by the layered fold
-        (_fold_input) and the one-statement SQL fold (_fold_replay_sql)."""
+        map-side collect_set job (see _fold)."""
         pair_pred = None
         pair_keys = None
         pcols = self.schema.partition_keys
@@ -971,259 +956,8 @@ class KvStore:
             )
         return batch_buckets, pair_pred, pair_keys
 
-    def _fold_replay_sql_ok(
-        self,
-        df: DataFrame,
-        partial_update_cols: list[str] | None,
-        merge_mode: str | None,
-    ) -> bool:
-        """Gate for the one-statement SQL fold: the composer covers the
-        default merge engine's fused fold only (the dominant commit
-        shape — every bulk load and plain upsert). Everything else —
-        partial updates (their delete probe + replay_exact dispatch),
-        non-default merge engines, DELETE-disabled tables whose batch
-        could carry deletes (the layered path runs the presence probe
-        and raises) — keeps the layered _fold_input + replay path."""
-        schema = self.schema
-        if partial_update_cols is not None:
-            return False
-        if merge_mode not in (None, "overwrite"):
-            return False
-        engine = "default" if merge_mode == "overwrite" else schema.merge_engine
-        if engine != "default":
-            return False
-        if schema.delete_behavior == "disable" and OP_COL in df.columns:
-            return False
-        return schema.changelog_image in ("full", "wal")
-
-    def _fold_replay_sql(
-        self,
-        spark: SparkSession,
-        df: DataFrame | list[DataFrame],
-        ordering: list[str] | None,
-        known_buckets: list[int] | None,
-    ):
-        """The fused fold + default-merge replay as ONE spark.sql
-        statement (guide §7.3 — driver latency): the layered path's
-        seven eagerly-analyzed plan layers (batch projection, seed
-        projection, union, repartition, __seq window, fold windows,
-        changelog emission — each a full JVM re-analysis of the
-        accumulated tree per commit) become nested subqueries analyzed
-        ONCE. The expression strings are the SAME ones the layered path
-        passes to selectExpr (shared builders in operators/replay.py),
-        so the resolved plan — and the transaction's single
-        hash(__bucket) exchange — is identical by construction
-        (tests/test_plans.py pins the plan shape; the commit-equivalence
-        suite compares the output row-for-row against the independent
-        two-pass baseline).
-
-        Returns (changelog, batch_buckets, pair_scope, bounded) — the
-        same contract `_fold_input` + `replay(cluster_cols=[__bucket],
-        emit_prior=True)` produces for `_commit_changelog(
-        prior_included=True)`.
-
-        `df` may be a LIST of batches (group commit, see upsert_many):
-        each batch is projected with its index as `__grp` (seed rows
-        -1), per-batch `__seq` restarts at 1 (PARTITION BY ..., __grp),
-        and every fold/emission window orders by (__grp, __seq) — the
-        per-key frames are then exactly the concatenation of N
-        sequential folds, so the emitted change rows are identical. With
-        a single batch the generated SQL is byte-identical to before."""
-        from fluss_spark.operators.replay import (
-            default_fold_select_list,
-            emit_select_list,
-            wal_image_ct_case_sql,
-            wal_image_where_sql,
-        )
-
-        schema = self.schema
-        pk, cols = schema.primary_key, schema.data_columns()
-        dfs = df if isinstance(df, list) else [df]
-        grouped = len(dfs) > 1
-        may_have_deletes = any(OP_COL in d.columns for d in dfs)
-        ord_names = list(ordering) if ordering else ["__arrival"]
-        ord_extra = [c for c in ord_names if c not in cols]
-        ftype = {f.name: f.type for f in schema.fields}
-
-        def _cast_sql_for(d: DataFrame) -> dict[str, str]:
-            have = set(d.columns)
-            return {
-                c: (
-                    f"CAST(`{c}` AS {parse_type(ftype[c]).simpleString()})"
-                    if c in have
-                    else f"CAST(NULL AS {parse_type(ftype[c]).simpleString()})"
-                )
-                for c in cols
-            }
-
-        cast_sqls = [_cast_sql_for(d) for d in dfs]
-
-        # batch projection (layer shared with _fold_input's `proj`);
-        # __arrival is computed inline — same per-row value as the
-        # layered path's pre-projection withColumn
-        def _bproj_for(d: DataFrame, cast_sql: dict[str, str], g: int) -> list[str]:
-            bproj = [f"{cast_sql[c]} AS `{c}`" for c in cols]
-            bproj.append(
-                f"`{OP_COL}`" if OP_COL in d.columns else f"'U' AS `{OP_COL}`"
-            )
-            bproj.append(f"0 AS `{SEED_COL}`")
-            for c in ord_extra:
-                bproj.append(
-                    "monotonically_increasing_id() AS `__arrival`"
-                    if c == "__arrival"
-                    else f"`{c}`"
-                )
-            keys_sql = ", ".join(cast_sql[c] for c in schema.bucket_keys)
-            bproj.append(
-                f"CAST(pmod(hash({keys_sql}), {schema.num_buckets}) AS INT)"
-                f" AS `{BUCKET_COL}`"
-            )
-            if grouped:
-                bproj.append(f"CAST({g} AS INT) AS `{GRP_COL}`")
-            return bproj
-
-        # write scope (same rules as _fold_input): skip on first commit,
-        # trust a caller-known superset, else one map-side discovery job
-        # over a minimal CAST key/partition frame (the union of all
-        # batches' keys under group commit)
-        state_now = self.catalog.current_commit(self.db, self.table)
-        manifest_now = self._manifest(state_now.snapshot_version)
-        has_snapshot = (
-            bool(manifest_now) or self._tail_start(state_now) is not None
-        )
-        pair_pred = None
-        pair_keys = None
-        if not has_snapshot:
-            batch_buckets = []
-        elif known_buckets is not None:
-            batch_buckets = [int(x) for x in known_buckets]
-        else:
-            disc_cols = list(
-                dict.fromkeys(list(schema.bucket_keys) + list(schema.partition_keys))
-            )
-            bdisc = reduce(
-                DataFrame.unionByName,
-                [
-                    d.selectExpr(*[f"{cs[c]} AS `{c}`" for c in disc_cols])
-                    for d, cs in zip(dfs, cast_sqls)
-                ],
-            )
-            batch_buckets, pair_pred, pair_keys = self._discover_scope(
-                bdisc, manifest_now
-            )
-
-        bounded = self.snapshot(
-            spark, buckets=batch_buckets, pair_pred=pair_pred, pair_keys=pair_keys
-        )
-
-        # seed projection — column-for-column the batch projection's
-        # order (UNION ALL aligns by position)
-        df_types = dict(dfs[0].dtypes)
-        sproj = (
-            [f"`{c}`" for c in cols]
-            + [f"'U' AS `{OP_COL}`", f"1 AS `{SEED_COL}`"]
-            + [
-                f"CAST(NULL AS {'bigint' if c == '__arrival' else df_types.get(c, 'bigint')}) AS `{c}`"
-                for c in ord_extra
-            ]
-            + [f"{self._bucket_sql()} AS `{BUCKET_COL}`"]
-            + ([f"CAST(-1 AS INT) AS `{GRP_COL}`"] if grouped else [])
-        )
-
-        def _ph(g: int) -> str:
-            return "batch" if not grouped else f"b{g}"
-
-        union_sql = f"SELECT {', '.join(sproj)} FROM {{snap}}" + "".join(
-            f" UNION ALL SELECT {', '.join(_bproj_for(d, cs, g))} FROM {{{_ph(g)}}}"
-            for g, (d, cs) in enumerate(zip(dfs, cast_sqls))
-        )
-        # the transaction's ONE exchange, sized to the table's bucket
-        # count (same node as DataFrame.repartition(n, __bucket))
-        repart_sql = (
-            f"SELECT /*+ REPARTITION({schema.num_buckets}, `{BUCKET_COL}`) */ *"
-            f" FROM ({union_sql})"
-        )
-        # per-batch __seq: under group commit the numbering partition
-        # additionally keys on __grp, so each batch's rows restart at 1
-        # per key — the sequential commits' numbering exactly
-        seq_part_cols = [f"`{BUCKET_COL}`"] + [f"`{c}`" for c in pk] + (
-            [f"`{GRP_COL}`"] if grouped else []
-        )
-        part_sql = ", ".join(seq_part_cols)
-        ord_sql = ", ".join(
-            [f"`{SEED_COL}` DESC"] + [f"`{c}` ASC NULLS FIRST" for c in ord_names]
-        )
-        seq_select = (
-            [f"`{c}`" for c in cols]
-            + [
-                f"`{OP_COL}`",
-                f"CAST(CASE WHEN `{SEED_COL}` = 1 THEN 0 ELSE "
-                f"row_number() OVER (PARTITION BY {part_sql} ORDER BY {ord_sql}) "
-                f"- sum(`{SEED_COL}`) OVER (PARTITION BY {part_sql}) END AS BIGINT) "
-                f"AS `{SEQ_COL}`",
-                f"`{SEED_COL}`",
-                f"`{BUCKET_COL}`",
-            ]
-            + ([f"`{GRP_COL}`"] if grouped else [])
-        )
-        fold_sql = f"SELECT {', '.join(seq_select)} FROM ({repart_sql})"
-
-        # DeleteBehavior.IGNORE rides as a WHERE on the fold output —
-        # same placement as replay()'s filter (after __seq assignment)
-        where = ""
-        if schema.delete_behavior == "ignore" and may_have_deletes:
-            where = f" WHERE `{OP_COL}` != 'D' OR `{SEED_COL}` = 1"
-        fold_order = [GRP_COL, SEQ_COL] if grouped else None
-        extra_fold_cols = [BUCKET_COL] + ([GRP_COL] if grouped else [])
-        d_sql = (
-            f"SELECT {', '.join(default_fold_select_list(cols, [BUCKET_COL] + list(pk), fold_order))}"
-            f" FROM ({fold_sql}){where}"
-        )
-        emit_sql = (
-            f"SELECT {', '.join(emit_select_list(cols, '__cur', '__prev', '__prev_present', 'true', extra_fold_cols, True))}"
-            f" FROM ({d_sql})"
-        )
-        final_sql = emit_sql
-        if schema.changelog_image == "wal":
-            # +I -> +U rewrite gates exactly like the layered
-            # _apply_changelog_image: default merge engine (the SCHEMA's
-            # engine — an overwrite batch to a non-default-engine table
-            # folds as last-write-wins but keeps +I, KvTablet semantics)
-            # and no auto-increment columns.
-            has_autoinc = any(f.auto_increment for f in schema.fields)
-            ct = (
-                wal_image_ct_case_sql()
-                if schema.merge_engine == "default" and not has_autoinc
-                else f"`{CHANGE_TYPE_COL}`"
-            )
-            final_sql = (
-                f"SELECT `{SEQ_COL}`, `{BUCKET_COL}`, "
-                + (f"`{GRP_COL}`, " if grouped else "")
-                + f"`{SUB_COL}`, "
-                f"{ct} AS `{CHANGE_TYPE_COL}`, "
-                + ", ".join(f"`{c}`" for c in cols)
-                + f" FROM ({emit_sql}) WHERE {wal_image_where_sql(True)}"
-            )
-
-        frames = {"snap": bounded}
-        frames.update({_ph(g): d for g, d in enumerate(dfs)})
-        changelog = spark.sql(final_sql, **frames)
-        pair_scope = (
-            (pair_pred, pair_keys)
-            if (pair_pred is not None or pair_keys is not None)
-            else None
-        )
-        return changelog, batch_buckets, pair_scope, bounded
-
     def _commit_changelog(
-        self,
-        spark: SparkSession,
-        changelog: DataFrame,
-        commit_ts_ms: int | None,
-        batch_buckets: list[int] | None = None,
-        pair_scope=None,
-        prior_frame: DataFrame | None = None,
-        prior_included: bool = False,
+        self, spark: SparkSession, changelog: DataFrame, commit_ts_ms: int | None
     ) -> CommitState:
         """Commit the replayed changelog: WAL append + touched-bucket
         snapshot rewrite + atomic commit, as ONE Spark action for every
@@ -1237,9 +971,7 @@ class KvStore:
         every K-th commit folds the accumulated tail into the snapshot
         via materialize(); reads stay exact throughout because
         snapshot() merges the uncovered tail on top."""
-        defer = int(
-            self.schema.properties.get("table.snapshot.defer-commits", "1") or "1"
-        )
+        defer = self.schema.defer_commits
         if defer > 1:
             state = self._commit_wal_only(spark, changelog, commit_ts_ms)
             if (
@@ -1253,10 +985,7 @@ class KvStore:
         # caller (upsert) scopes it off around the whole serial
         # transaction — A/B at sf0.1: warm commit 1.4s -> 1.0s from the
         # commit action alone, plus the discovery job's replan on top.
-        return self._commit_single_action(
-            spark, changelog, commit_ts_ms, batch_buckets, pair_scope, prior_frame,
-            prior_included,
-        )
+        return self._commit_single_action(spark, changelog, commit_ts_ms)
 
     def _commit_wal_only(
         self, spark: SparkSession, changelog: DataFrame, commit_ts_ms: int | None
@@ -1429,24 +1158,18 @@ class KvStore:
         return new_state
 
     def _commit_single_action(
-        self,
-        spark: SparkSession,
-        changelog: DataFrame,
-        commit_ts_ms: int | None,
-        batch_buckets: list[int] | None,
-        pair_scope=None,
-        prior_frame: DataFrame | None = None,
-        prior_included: bool = False,
+        self, spark: SparkSession, changelog: DataFrame, commit_ts_ms: int | None
     ) -> CommitState:
         """One write action produces the WAL and the snapshot as sibling
         partition dirs (__dest=w / __dest=s), fused into a single
         bucket-window pass:
 
-          - events (change rows) union prior-snapshot rows (seq=-1, so
-            they sort before any event of their key) hash into buckets;
-            the prior feed is always bounded to the batch's buckets
-            (discovered in _fold_input) — O(touched buckets), never
-            O(table);
+          - events (change rows) and prior-snapshot rows (the fold's
+            re-emitted seed rows: NULL change type, sub=-1, so they sort
+            before any event of their key) arrive hash-partitioned by
+            bucket from the fold's exchange; the prior feed is bounded
+            to the batch's buckets (discovered in _fold) —
+            O(touched buckets), never O(table);
           - one window over (bucket) ordered (seq, sub, pk) assigns
             per-bucket WAL offsets (running event count + old HWM), so
             offset order within a bucket IS batch-arrival order across
@@ -1499,10 +1222,7 @@ class KvStore:
         state0 = self.catalog.current_commit(self.db, self.table)
         version = state0.version + 1
         ts_ms = commit_ts_ms if commit_ts_ms is not None else int(time.time() * 1000)
-        out, persisted, auto_next = self._commit_plan(
-            spark, changelog, ts_ms, batch_buckets, pair_scope, state0, prior_frame,
-            prior_included,
-        )
+        out, persisted, auto_next = self._commit_plan(changelog, ts_ms, state0)
         combined = os.path.join(self.log.tmp_dir, f"commit-v{version}")
         self._write_combined(out, combined, persisted)
         return self._commit_finish(spark, combined, state0, version, ts_ms, auto_next)
@@ -1512,9 +1232,6 @@ class KvStore:
         spark: SparkSession,
         changelog: DataFrame,
         ts_list: list[int],
-        batch_buckets: list[int] | None,
-        pair_scope,
-        prior_frame: DataFrame | None,
         grp_count: int,
     ) -> list[CommitState]:
         """Publish a grouped fold (see upsert_many) as `grp_count`
@@ -1526,8 +1243,7 @@ class KvStore:
         self.log.clean_orphans()
         state0 = self.catalog.current_commit(self.db, self.table)
         out, persisted, _auto = self._commit_plan(
-            spark, changelog, ts_list, batch_buckets, pair_scope, state0,
-            prior_frame, prior_included=True, grp_count=grp_count,
+            changelog, ts_list, state0, grp_count=grp_count
         )
         combined = os.path.join(self.log.tmp_dir, f"commit-v{state0.version + 1}")
         self._write_combined(out, combined, persisted, grouped=True)
@@ -1537,14 +1253,9 @@ class KvStore:
 
     def _commit_plan(
         self,
-        spark: SparkSession,
         changelog: DataFrame,
         ts_ms: int | list[int],
-        batch_buckets: list[int] | None,
-        pair_scope,
         state0: CommitState,
-        prior_frame: DataFrame | None = None,
-        prior_included: bool = False,
         grp_count: int | None = None,
     ):
         """Build the fused commit-output frame (see _commit_single_action)
@@ -1554,21 +1265,19 @@ class KvStore:
         optimistic path can run it (and the write) outside the table
         lock.
 
-        `prior_included=True` is the single-exchange contract
-        (_fold_input fused=True + replay emit_prior=True): the changelog
-        already carries `__bucket`, is hash-partitioned by it, and
-        includes the prior-snapshot rows as NULL-change-type records —
-        so this plan adds NO exchange, no second snapshot scan and no
-        bucket recomputation; its windows reuse the fold's partitioning."""
+        The changelog is the eager fold's (see _fold): it carries
+        `__bucket`, is hash-partitioned by it, and includes the
+        prior-snapshot rows as NULL-change-type records — so this plan
+        adds NO exchange, no second snapshot scan and no bucket
+        recomputation; its windows reuse the fold's partitioning."""
         schema = self.schema
         pk, cols = schema.primary_key, schema.data_columns()
-        old_manifest = self._manifest(state0.snapshot_version) or {}
         grouped = grp_count is not None
         if grouped:
-            # group gate (upsert_many) excludes these shapes
-            assert prior_included and not any(
+            # group gate (upsert_many) excludes auto-increment tables
+            assert not any(
                 f.auto_increment for f in schema.fields
-            ), "group commit requires the fused fold and no auto-increment"
+            ), "group commit requires no auto-increment"
 
         # Everything below builds the plan from WHOLE-SELECT SQL strings
         # (selectExpr / one JVM parse each) instead of per-column Column
@@ -1577,10 +1286,6 @@ class KvStore:
         qcols = [f"`{c}`" for c in cols]
         # Spark-SQL DDL type strings (the schema's own are engine DDL)
         declared = {f.name: parse_type(f.type).simpleString() for f in schema.fields}
-        bucket_sql = (
-            f"CAST(pmod(hash({', '.join(f'`{c}`' for c in schema.bucket_keys)}), "
-            f"{schema.num_buckets}) AS INT)"
-        )
 
         # M10: pre-assign per-bucket id segments driver-side, sized by
         # the bucket's INSERT (+I) count only — an id is minted once per
@@ -1604,9 +1309,7 @@ class KvStore:
                 for r in changelog.filter(
                     F.col(CHANGE_TYPE_COL) == INSERT
                 )
-                .selectExpr(
-                    f"`{BUCKET_COL}` AS b" if prior_included else f"{bucket_sql} AS b"
-                )
+                .selectExpr(f"`{BUCKET_COL}` AS b")
                 .groupBy("b")
                 .agg(F.count("*").alias("cnt"))
                 .collect()
@@ -1637,38 +1340,9 @@ class KvStore:
         ev = changelog.selectExpr(
             *[f"CAST(`{c}` AS {declared[c]}) AS `{c}`" for c in cols],
             *sys_cast,
-            *([f"`{BUCKET_COL}`"] if prior_included else []),
+            f"`{BUCKET_COL}`",
             *([f"`{GRP_COL}`"] if grouped else []),
         )
-        if old_manifest and not prior_included:
-            # prior rows of the candidate buckets ride the same window;
-            # a prior row that is still the last row of its key (no
-            # events) is the survivor the two-pass path found by
-            # anti-join. seq=-1 sorts prior rows before every event of
-            # their key and loses the per-key max to any event. On
-            # partitioned tables the typed pair predicate additionally
-            # bounds the feed to the batch's (partition, bucket) pairs.
-            pair_pred, pair_keys = pair_scope if pair_scope else (None, None)
-            # reuse the fold's bounded-snapshot frame when the caller
-            # provides it: same plan, one analysis, and the seed + prior
-            # feed are guaranteed the same basis
-            prior = (
-                prior_frame
-                if prior_frame is not None
-                else self.snapshot(
-                    spark,
-                    buckets=batch_buckets,
-                    pair_pred=pair_pred,
-                    pair_keys=pair_keys,
-                )
-            )
-            old = prior.selectExpr(
-                *qcols,
-                f"CAST(NULL AS STRING) AS `{CHANGE_TYPE_COL}`",
-                f"CAST(-1 AS BIGINT) AS `{SEQ_COL}`",
-                f"CAST(-1 AS INT) AS `{SUB_COL}`",
-            )
-            ev = ev.unionByName(old)
 
         pk_sql = ", ".join(f"`{c}`" for c in pk)
         # arrival-order window: offsets follow (seq, sub, pk) — the fold
@@ -1705,20 +1379,6 @@ class KvStore:
             else f"struct(`{SEQ_COL}`, `{SUB_COL}`)"
         )
         is_last = f"({pos} = max({pos}) OVER (PARTITION BY `{BUCKET_COL}`, {pk_sql}))"
-        if not prior_included:
-            ev = ev.selectExpr("*", f"{bucket_sql} AS `{BUCKET_COL}`")
-            # the bucket window's exchange sized to the table's bucket
-            # count, not spark.sql.shuffle.partitions: PARTITION BY bucket
-            # caps the usable parallelism at num_buckets (the reference
-            # runs exactly one leader per bucket), so any extra shuffle
-            # partitions are guaranteed-empty tasks that still pay
-            # scheduling + file-commit setup in the write stage.
-            # hash(bucket) into num_buckets satisfies the window's
-            # required distribution, so no second exchange is added.
-            # (prior_included: the changelog arrives already hash-
-            # partitioned by __bucket from the fold's exchange — adding
-            # either node here would re-shuffle for nothing.)
-            ev = ev.repartition(schema.num_buckets, F.col(BUCKET_COL))
         carried: dict[str, str] = {}
         if id_expr:
             # insert-stable ids (reference M10 semantics): a fresh id is
@@ -2157,127 +1817,6 @@ class KvStore:
                 ).cast("long"),
             )
         return ev.select(*orig_cols), auto_next
-
-    def _commit_twopass(
-        self, spark: SparkSession, changelog: DataFrame, commit_ts_ms: int | None
-    ) -> CommitState:
-        """WAL append + touched-bucket snapshot rewrite + atomic commit.
-        Retained as the equivalence BASELINE the test suite compares the
-        single-action path against (tests/test_commit_equivalence.py);
-        no production route dispatches here anymore.
-
-        WAL-FIRST: the fold plan is computed exactly ONCE — inside the
-        WAL write job — and the STAGED WAL FILES are the lineage cut.
-        The snapshot derivation re-reads those files (metadata-listed,
-        bucket-pruned), so it can never diverge from what was appended
-        even if the input DataFrame is non-deterministic: the file is
-        the record. This replaces the old eager localCheckpoint barrier
-        (one extra full materialization + its scheduling round-trips per
-        commit — ~25% of the steady-state commit constant) with the
-        durable artifact the commit must produce anyway."""
-        schema = self.schema
-        pk = schema.primary_key
-
-        # WAL append: per-bucket offsets ordered by the fold sequence.
-        # All events of one key land in one bucket (bucket key ⊆ pk), so
-        # per-key changelog order is preserved in offset order.
-        old_hwm = {int(b): off for b, off in self.catalog.current_commit(self.db, self.table).log_hwm.items()}
-        wal_order = [SEQ_COL, SUB_COL] + pk
-        auto_override = None
-        stamp_persist = None
-        if any(f.auto_increment for f in schema.fields):
-            # persist = barrier: the insert-count job and the WAL write
-            # must see the same evaluated fold rows
-            stamp_persist = changelog.persist()
-            changelog, auto_override = self._stamp_autoinc_baseline(
-                spark, stamp_persist
-            )
-        try:
-            state = self.log.append(
-                changelog,
-                ordering=wal_order,
-                extra_cols=[CHANGE_TYPE_COL, SEQ_COL, SUB_COL],
-                commit_ts_ms=commit_ts_ms,
-                defer_commit=True,
-                auto_increment_override=auto_override,
-            )
-        finally:
-            if stamp_persist is not None:
-                stamp_persist.unpersist()
-        version = state.version
-        # the staged files ARE this commit's changelog (see docstring)
-        staging = self.log.staging_path(version)
-        changelog = (
-            spark.read.schema(ddl_of(self.log.file_schema()))
-            .option("basePath", staging)
-            .parquet(staging)
-        )
-
-        # touched buckets = high-watermark diff — no extra Spark job
-        touched_buckets = [
-            int(b) for b, off in state.log_hwm.items() if off != old_hwm.get(int(b))
-        ]
-
-        old_manifest = self._manifest(
-            self.catalog.current_commit(self.db, self.table).snapshot_version
-        ) or {}
-        new_manifest = dict(old_manifest)
-
-        if touched_buckets:
-            from fluss_spark.operators.replay import _snapshot_from_changelog
-
-            # last change event per key in (seq, sub) order — per key
-            # identical to WAL-offset order (wal_order above sorts by it)
-            touched_final = _snapshot_from_changelog(changelog, schema)
-            touched_keys = changelog.select(*pk)  # anti join dedups
-            # only the touched buckets are rewritten; a key whose last
-            # event is -D must not survive via the old rows (anti-join on
-            # ALL keys with change events)
-            old_rows = self.snapshot(spark, buckets=touched_buckets)
-            untouched_keys = old_rows.join(touched_keys, on=pk, how="left_anti")
-            bucket_rows = untouched_keys.unionByName(touched_final)
-
-            data_dir = f"data-v{version}"
-            (
-                bucket_rows.withColumn(BUCKET_COL, self._bucket_expr())
-                .repartition(min(schema.num_buckets, 32), F.col(BUCKET_COL))
-                .write.mode("overwrite")
-                .partitionBy(*schema.partition_keys, BUCKET_COL)
-                .parquet(os.path.join(self.snapshot_dir, data_dir))
-            )
-            if schema.partition_keys:
-                # the baseline rewrites touched buckets WHOLE (across
-                # partitions): every pair of a touched bucket remaps to
-                # the new dir; pairs with no surviving rows drop out
-                snap_pairs = set(
-                    self._walk_pairs(os.path.join(self.snapshot_dir, data_dir))
-                )
-                for pair in [
-                    p for p in new_manifest if p[1] in set(touched_buckets)
-                ]:
-                    if pair not in snap_pairs:
-                        new_manifest.pop(pair, None)
-                for pair in snap_pairs:
-                    new_manifest[pair] = data_dir
-            else:
-                for bkt in touched_buckets:
-                    new_manifest[bkt] = data_dir
-
-        if schema.partition_keys:
-            dir_pairs = dict(
-                self._manifest_dir_pairs(
-                    self.catalog.current_commit(self.db, self.table).snapshot_version
-                )
-            )
-            if touched_buckets:
-                dir_pairs[data_dir] = sorted(snap_pairs)
-            self._write_manifest(version, new_manifest, dir_pairs)
-        else:
-            self._write_manifest(version, new_manifest)
-        state.snapshot_version = version
-        self.log.publish(version)
-        self.catalog.commit(self.db, self.table, state)
-        return state
 
     def insert_if_not_exists(self, df: DataFrame, ordering: list[str] | None = None) -> DataFrame:
         """L3 (Lookup.enableInsertIfNotExists, Lookup.java:97-105): a

@@ -154,7 +154,7 @@ class FlussTable:
         return (
             props.get("table.commit.concurrency", "serial") == "optimistic"
             and not any(f.auto_increment for f in self.schema.fields)
-            and int(props.get("table.snapshot.defer-commits", "1") or "1") <= 1
+            and self.schema.defer_commits <= 1
             # defer-commits lowered while a WAL tail is pending: the
             # serial path folds the tail first (under the lock); the
             # optimistic path cannot, so route serial until it is gone

@@ -154,6 +154,14 @@ class TableSchema:
         return self.properties.get("table.changelog.image", "full")
 
     @property
+    def defer_commits(self) -> int:
+        """table.snapshot.defer-commits = K: commits per snapshot
+        materialization. K <= 1 materializes every commit (the fused
+        single-action commit); K > 1 makes commits WAL-only until the
+        K-th folds the tail into the snapshot."""
+        return int(self.properties.get("table.snapshot.defer-commits", "1") or "1")
+
+    @property
     def agg_spec(self) -> dict[str, str]:
         """column -> aggregate function (aggregation merge engine)."""
         return {f.name: f.agg for f in self.fields if f.agg}

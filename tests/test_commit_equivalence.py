@@ -2,8 +2,8 @@
 
 The fused commit (`KvStore._commit_single_action`: one write action
 producing WAL + snapshot as sibling partition dirs) must produce the
-SAME commit artifacts as the retained two-pass WAL-first baseline
-(`_commit_twopass`) for any batch sequence and every pk-table layout
+SAME commit artifacts as the two-pass WAL-first baseline
+(tests/twopass_baseline.py) for any batch sequence and every pk-table layout
 (plain, partitioned, auto-increment):
 
   - identical snapshot rows,
@@ -26,7 +26,6 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from fluss_spark.catalog import Catalog
-from fluss_spark.sources.kv import KvStore
 from fluss_spark.table import create_table
 from fluss_spark.types import (
     BUCKET_COL,
@@ -36,6 +35,7 @@ from fluss_spark.types import (
     Field,
     TableSchema,
 )
+from tests.twopass_baseline import commit_twopass
 
 
 def _schema():
@@ -58,10 +58,9 @@ def _force_twopass(t):
     INDEPENDENT implementation, so it receives the plain changelog
     (events only) and re-derives survivors by its own anti-join."""
 
-    def _twopass(self, spark, cl, ts, bb=None, pp=None, prior=None, prior_included=False):
-        if prior_included:
-            cl = cl.filter(f"`{CHANGE_TYPE_COL}` IS NOT NULL").drop(BUCKET_COL)
-        return KvStore._commit_twopass(self, spark, cl, ts)
+    def _twopass(self, spark, cl, ts):
+        cl = cl.filter(f"`{CHANGE_TYPE_COL}` IS NOT NULL").drop(BUCKET_COL)
+        return commit_twopass(self, spark, cl, ts)
 
     t.kv._commit_changelog = pytypes.MethodType(_twopass, t.kv)
 
@@ -450,84 +449,192 @@ def test_commit_paths_equivalent_property_partitioned(
         )
 
 
-def test_sql_fold_changelog_matches_layered_fold(spark, tmp_path):
-    """The one-statement SQL fold (`_fold_replay_sql`) must emit the
-    EXACT changelog frame — events, NULL-change-type prior rows, __seq /
-    __sub / __bucket — that the layered `_fold_input(fused=True)` +
-    `replay(cluster_cols=[__bucket], emit_prior=True)` chain emits, on
-    every shape the gate admits: plain, WAL changelog image (+I -> +U
-    shortcut + -U drop, NULL-safe for prior rows), DeleteBehavior.IGNORE
-    (the post-__seq filter), and a partitioned table (pair discovery)."""
-    from pyspark.sql import functions as F
+_FOLD_BASE = [(k, f"v{k}", k * 10) for k in range(12)]
+_FOLD_BATCH = [
+    (1, "x", 111, "U"), (1, "y", 112, "U"), (3, None, 0, "D"),
+    (99, "new", 9, "U"), (4, "d4", 0, "D"), (4, "back", 44, "U"),
+    (2, "lo", 5, "U"), (5, "nv", None, "U"),
+]
+# partial updates target (k, n): the first batch only upserts, the
+# second interleaves deletes (the sequential replay_exact fold)
+_PARTIAL_BATCH = [(2, 222, "U"), (3, 333, "U"), (50, 500, "U")]
+_PARTIAL_DEL_BATCH = [
+    (2, 222, "U"), (3, 7, "D"), (50, 500, "U"), (50, 501, "D"), (60, 1, "D"),
+]
 
-    from fluss_spark.operators.replay import replay
-    from fluss_spark.sources.kv import BUCKET_COL
 
+def _model_step(engine, cur, rec, seq, cur_rank, pk, partial, ignore):
+    """One record of the per-key fold: (events, new state, new rank).
+    `cur`/`rec` are column dicts; events are (change type, sub, row)."""
+
+    def upsert(new):
+        if cur is None:
+            return [("+I", 0, new)]
+        return [("-U", 0, cur), ("+U", 1, new)]
+
+    if engine != "default" and rec["__op"] == "D":
+        return [], cur, cur_rank  # merge engines fold upserts only
+    if engine == "first_row":
+        return ([("+I", 0, rec)], rec, None) if cur is None else ([], cur, cur_rank)
+    if engine == "versioned":
+        rank = (-(2**63) if rec["n"] is None else rec["n"], seq)
+        if cur is None or rank >= cur_rank:
+            return upsert(rec), rec, rank
+        return [], cur, cur_rank
+    if engine == "aggregation":  # v: last_value_ignore_nulls, n: sum
+        new = dict(rec)
+        if cur is not None:
+            new["v"] = rec["v"] if rec["v"] is not None else cur["v"]
+            if cur["n"] is not None:
+                new["n"] = cur["n"] + (rec["n"] or 0)
+        return upsert(new), new, None
+    if rec["__op"] == "D":
+        if ignore or cur is None:
+            return [], cur, None
+        if not partial:
+            return [("-D", 0, cur)], None, None
+        # PartialUpdater.deleteRow: retract the targets; the row dies
+        # when every non-pk column is null
+        new = {c: (None if c in partial and c not in pk else x) for c, x in cur.items()}
+        if all(x is None for c, x in new.items() if c not in pk):
+            return [("-D", 0, cur)], None, None
+        return [("-U", 0, cur), ("+U", 1, new)], new, None
+    if partial:
+        base = cur if cur is not None else {c: None for c in rec if c != "__op"}
+        new = {c: (rec[c] if c in partial else x) for c, x in base.items()}
+    else:
+        new = {c: x for c, x in rec.items() if c != "__op"}
+    return upsert(new), new, None
+
+
+def _model_changelog(schema, seed, batch, bucket, merge_mode, partial, eager):
+    """Expected changelog rows of one fold: the seed's prior rows (eager
+    only) plus each batch key's events, folded in `n` order (NULLS
+    FIRST) — the fold order `ordering=["n"]` asks for."""
+    pk = schema.primary_key
+    engine = "default" if merge_mode == "overwrite" else schema.merge_engine
+    ignore = schema.delete_behavior == "ignore"
+    wal = schema.changelog_image == "wal"
+    rewrite_insert = wal and schema.merge_engine == "default" and not partial
+    keyof = lambda r: tuple(r[c] for c in pk)  # noqa: E731
+    state = {keyof(r): r for r in seed}
+    out = [(0, -1, None, r) for r in seed] if eager else []
+    by_key: dict = {}
+    for rec in batch:
+        by_key.setdefault(keyof(rec), []).append(rec)
+    for key, recs in by_key.items():
+        cur = state.get(key)
+        rank = None if cur is None else (cur["n"], 0)
+        recs.sort(key=lambda r: (r["n"] is not None, r["n"]))
+        for seq, rec in enumerate(recs, 1):
+            events, cur, rank = _model_step(engine, cur, rec, seq, rank, pk, partial, ignore)
+            for ct, sub, row in events:
+                if wal and ct == "-U":
+                    continue
+                out.append((seq, sub, "+U" if rewrite_insert and ct == "+I" else ct, row))
+    cols = schema.data_columns()
+    return [
+        (seq, *([bucket[keyof(row)]] if eager else []), sub, ct, *[row[c] for c in cols])
+        for seq, sub, ct, row in out
+    ]
+
+
+def test_fold_changelog_matches_model(spark, tmp_path):
+    """The fold compiler (`KvStore._fold`, one spark.sql statement per
+    commit) emits exactly the changelog a per-key Python model of the
+    merge engines predicts — events, __seq / __sub / __bucket, and the
+    NULL-change-type prior rows of exactly the seed rows in the batch's
+    write scope (its buckets, or (partition, bucket) pairs) — for every
+    merge engine, the WAL changelog image (+I -> +U shortcut, -U drop,
+    NULL-safe for prior rows), DeleteBehavior.IGNORE (deletes dropped
+    after __seq assignment), a partitioned table, overwrite mode on a
+    versioned WAL-image table (last-write-wins fold but no +I -> +U: the
+    shortcut gates on the schema's engine), partial updates with and
+    without deletes, and a deferred table (semi-joined seed, events
+    only)."""
+    versioned = {
+        "table.merge-engine": "versioned",
+        "table.merge-engine.versioned.ver-column": "n",
+    }
     shapes = {
-        "plain": ({}, None, None),
-        "wal": ({"table.changelog.image": "wal"}, None, None),
-        "ignore": ({"table.delete.behavior": "ignore"}, None, None),
-        "part": ({}, ["dt"], None),
-        # merge_mode='overwrite' on a NON-default engine with WAL image:
-        # the gate admits it (the fold is plain last-write-wins), but the
-        # +I -> +U shortcut must NOT apply — _apply_changelog_image gates
-        # on schema.merge_engine, not the effective fold engine.
+        # name: (properties, partition keys, merge_mode, partial cols)
+        "plain": ({}, None, None, None),
+        "wal": ({"table.changelog.image": "wal"}, None, None, None),
+        "ignore": ({"table.delete.behavior": "ignore"}, None, None, None),
+        "part": ({}, ["dt"], None, None),
         "ow_versioned_wal": (
-            {
-                "table.merge-engine": "versioned",
-                "table.merge-engine.versioned.ver-column": "n",
-                "table.changelog.image": "wal",
-            },
-            None,
-            "overwrite",
+            {**versioned, "table.changelog.image": "wal"}, None, "overwrite", None,
         ),
+        "first_row": ({"table.merge-engine": "first_row"}, None, None, None),
+        "versioned": (versioned, None, None, None),
+        "aggregation": ({"table.merge-engine": "aggregation"}, None, None, None),
+        "partial": ({}, None, None, ["k", "n"]),
+        "partial_deletes": ({}, None, None, ["k", "n"]),
+        "deferred": ({"table.snapshot.defer-commits": "3"}, None, None, None),
     }
     cat = Catalog(str(tmp_path / "wh"))
     ts = 1_700_000_900_000
-    for name, (props, parts, mm) in shapes.items():
+    for name, (props, parts, mm, partial) in shapes.items():
+        agg = name == "aggregation"
         fields = [
             Field("k", "INT", nullable=False),
-            Field("v", "STRING"),
-            Field("n", "BIGINT"),
+            Field("v", "STRING", agg="last_value_ignore_nulls" if agg else None),
+            Field("n", "BIGINT", agg="sum" if agg else None),
         ]
         pk = ["k"]
-        ddl = "k int, v string, n long, __op string"
-        mk = lambda rows: spark.createDataFrame(rows, ddl)  # noqa: E731
-        base = [(k, f"v{k}", k * 10, "U") for k in range(12)]
-        batch = [
-            (1, "x", 111, "U"), (1, "y", 112, "U"), (3, None, 0, "D"),
-            (99, "new", 9, "U"), (4, "d4", 0, "D"), (4, "back", 44, "U"),
-        ]
+        base = [dict(zip(("k", "v", "n"), r)) for r in _FOLD_BASE]
+        if partial:
+            rows = _PARTIAL_DEL_BATCH if name == "partial_deletes" else _PARTIAL_BATCH
+            batch = [dict(zip(("k", "n", "__op"), r)) for r in rows]
+        else:
+            batch = [dict(zip(("k", "v", "n", "__op"), r)) for r in _FOLD_BATCH]
         if parts:
             fields = [Field("dt", "STRING", nullable=False)] + fields
             pk = ["dt", "k"]
-            ddl = "dt string, " + ddl
-            base = [("a", *r) for r in base] + [("b", *r) for r in base[:4]]
-            batch = [("a", *r) for r in batch] + [("b", 2, "bx", 22, "U")]
+            base = [{"dt": "a", **r} for r in base] + [{"dt": "b", **r} for r in base[:4]]
+            batch = [{"dt": "a", **r} for r in batch] + [
+                {"dt": "b", "k": 2, "v": "bx", "n": 22, "__op": "U"}
+            ]
         schema = TableSchema(
             fields=fields, primary_key=pk, partition_keys=parts or [],
             num_buckets=4, properties=dict(props),
         )
-        t = create_table(cat, "db", f"sqlfold_{name}", schema)
-        t.kv.upsert(mk(base), ordering=["n"], commit_ts_ms=ts)
+        t = create_table(cat, "db", f"fold_{name}", schema)
+        cols = schema.data_columns()
+        t.kv.upsert(
+            spark.createDataFrame([tuple(r.values()) for r in base], schema.to_struct_type()),
+            commit_ts_ms=ts,
+        )
+        bcols = list(batch[0])
+        if partial and name == "partial":
+            bcols.remove("__op")  # an all-upsert batch carries no __op
+        ddl = ", ".join(
+            f"`{c}` {'string' if c == '__op' else schema.to_struct_type()[c].dataType.simpleString()}"
+            for c in bcols
+        )
+        df = spark.createDataFrame([tuple(r[c] for c in bcols) for r in batch], ddl)
 
-        df_sql = mk(batch)
-        assert t.kv._fold_replay_sql_ok(df_sql, None, mm), name
-        cl_sql, bb_s, _ps, _prior = t.kv._fold_replay_sql(
-            spark, df_sql, ["n"], None
-        )
-        fold_in, mhd, bb_l, _ps2, _prior2 = t.kv._fold_input(
-            spark, mk(batch), ["n"], None, fused=True
-        )
-        cl_lay, _ = replay(
-            fold_in, schema, may_have_deletes=mhd,
-            cluster_cols=[BUCKET_COL], emit_prior=True,
-            merge_mode=mm,
-        )
-        assert bb_s == bb_l, name
-        assert sorted(cl_sql.columns) == sorted(cl_lay.columns), name
-        cols = cl_lay.columns
-        key = lambda r: tuple((x is None, x) for x in r)  # noqa: E731
-        rows_sql = sorted((tuple(r[c] for c in cols) for r in cl_sql.collect()), key=key)
-        rows_lay = sorted((tuple(r[c] for c in cols) for r in cl_lay.collect()), key=key)
-        assert rows_sql == rows_lay, f"{name}: SQL fold != layered fold"
+        # the engine's own bucket function, evaluated independently of the fold
+        keys = {tuple(r[c] for c in pk) for r in base + batch}
+        kdf = spark.createDataFrame(sorted(keys), ", ".join(
+            f"`{c}` {schema.to_struct_type()[c].dataType.simpleString()}" for c in pk
+        ))
+        bucket = {
+            tuple(r[c] for c in pk): r["b"]
+            for r in kdf.select(*pk, t.kv._bucket_expr().alias("b")).collect()
+        }
+        eager = schema.defer_commits <= 1
+        scope = {(*[r[c] for c in parts or []], bucket[tuple(r[c] for c in pk)]) for r in batch}
+        seed = [
+            r for r in base
+            if (*[r[c] for c in parts or []], bucket[tuple(r[c] for c in pk)]) in scope
+        ]
+        for r in batch:
+            r.setdefault("v", None)
+        want = _model_changelog(schema, seed, batch, bucket, mm, partial, eager)
+
+        cl = t.kv._fold(spark, df, ["n"], None, partial_update_cols=partial, merge_mode=mm)
+        out_cols = ["__seq", *([BUCKET_COL] if eager else []), "__sub", CHANGE_TYPE_COL, *cols]
+        assert sorted(cl.columns) == sorted(out_cols), name
+        got = sorted((tuple(r[c] for c in out_cols) for r in cl.collect()), key=_nskey)
+        assert got == sorted(want, key=_nskey), f"{name}: fold != model"

@@ -295,36 +295,66 @@ def test_replay_fold_is_single_shuffle(spark, sf_dir):
     assert v_simple.count("Exchange") == 1, v_simple
 
 
-def test_full_upsert_fold_is_single_shuffle(spark, sf_dir, tmp_path):
-    """The FULL second-commit upsert transaction — seed read ∪ batch,
-    __seq assignment, changelog fold, AND the fused commit-output plan
-    (WAL offsets, is-last routing, snapshot rewrite feed) — must cost
-    exactly ONE hash exchange, keyed by __bucket and sized to the
-    table's bucket count. Every window is keyed __bucket[, pk] (bucket
-    is a function of the pk), so they all reuse the fold's exchange; the
-    prior-snapshot rows ride the same exchange as re-emitted seed rows,
-    so the snapshot is scanned ONCE and there is no semi-join at all."""
+_FOLD_ENGINES = {
+    # name: (table properties, partial-update target columns)
+    "default": ({}, None),
+    "partial": ({}, ["user_id", "value"]),
+    "first_row": ({"table.merge-engine": "first_row"}, None),
+    "versioned": (
+        {
+            "table.merge-engine": "versioned",
+            "table.merge-engine.versioned.ver-column": "ver",
+        },
+        None,
+    ),
+    "aggregation": ({"table.merge-engine": "aggregation"}, None),
+}
+
+
+def _assert_fold_commit_plan_single_shuffle(
+    spark, sf_dir, tmp_path, engine, with_deletes=False
+):
+    """The FULL second-commit upsert transaction of a merge engine —
+    the one-statement fold (`_fold`: seed read ∪ batch, __seq
+    assignment, engine fold, changelog emission) AND the fused
+    commit-output plan (WAL offsets, is-last routing, snapshot rewrite
+    feed) — must cost exactly ONE hash exchange, keyed by __bucket and
+    sized to the table's bucket count. Every window is keyed
+    __bucket[, pk] (bucket is a function of the pk), so they all reuse
+    the fold's exchange; the prior-snapshot rows ride the same exchange
+    as re-emitted seed rows, so the snapshot is scanned ONCE, the batch
+    once, and there is no semi-join or broadcast at all."""
     import re
 
     from fluss_spark.catalog import Catalog
-    from fluss_spark.operators.replay import replay
+    from fluss_spark.operators.replay import OP_COL
     from fluss_spark.sources.kv import BUCKET_COL
     from fluss_spark.table import create_table
 
+    props, partial = _FOLD_ENGINES[engine]
     ev = load(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "value")
+    fields = [
+        Field("user_id", "BIGINT"),
+        Field("event_type", "STRING"),
+        Field("value", "DOUBLE", agg="sum" if engine == "aggregation" else None),
+    ]
+    if engine == "versioned":
+        fields.append(Field("ver", "BIGINT"))
+        ev = ev.withColumn("ver", F.col("event_id"))
     schema = TableSchema(
-        fields=[Field("user_id", "BIGINT"), Field("event_type", "STRING"), Field("value", "DOUBLE")],
-        primary_key=["user_id"],
-        num_buckets=8,
+        fields=fields, primary_key=["user_id"], num_buckets=8, properties=props
     )
-    t = create_table(Catalog(str(tmp_path / "wh")), "db", "fold_plan", schema)
+    t = create_table(Catalog(str(tmp_path / "wh")), "db", "sql_fold_plan", schema)
     t.upsert(ev.filter(F.col("event_id") % 2 == 0), ordering=["event_id"])
-    fold_in, mhd, bb, ps, _prior = t.kv._fold_input(
-        spark, ev.filter(F.col("event_id") % 2 == 1), ["event_id"], fused=True
-    )
-    changelog, _ = replay(
-        fold_in, schema, may_have_deletes=mhd,
-        cluster_cols=[BUCKET_COL], emit_prior=True,
+    batch = ev.filter(F.col("event_id") % 2 == 1)
+    if with_deletes:
+        batch = batch.withColumn(
+            OP_COL, F.when(F.col("event_id") % 3 == 0, "D").otherwise("U")
+        )
+    if partial:
+        batch = batch.select(*partial, "event_id")
+    changelog = t.kv._fold(
+        spark, batch, ["event_id"], None, partial_update_cols=partial
     )
     simple = changelog._sc._jvm.PythonSQLUtils.explainString(
         changelog._jdf.queryExecution(), "simple"
@@ -333,10 +363,8 @@ def test_full_upsert_fold_is_single_shuffle(spark, sf_dir, tmp_path):
     assert "BroadcastHashJoin" not in simple, simple
 
     # the COMPLETE commit-output plan adds zero exchanges on top
-    state0 = t.kv.catalog.current_commit("db", "fold_plan")
-    out, _persisted, _auto = t.kv._commit_plan(
-        spark, changelog, 123456, bb, ps, state0, prior_included=True
-    )
+    state0 = t.kv.catalog.current_commit("db", "sql_fold_plan")
+    out, _persisted, _auto = t.kv._commit_plan(changelog, 123456, state0)
     full = out._sc._jvm.PythonSQLUtils.explainString(
         out._jdf.queryExecution(), "simple"
     )
@@ -346,47 +374,27 @@ def test_full_upsert_fold_is_single_shuffle(spark, sf_dir, tmp_path):
     assert full.count("InMemoryFileIndex") == 2, full
 
 
+def test_full_upsert_fold_is_single_shuffle(spark, sf_dir, tmp_path):
+    """A second-commit batch that mixes upserts and `__op`='D' deletes
+    takes the delete-aware fold, and its complete commit-output plan
+    keeps the single bucket-keyed exchange, two scans and no
+    broadcast."""
+    _assert_fold_commit_plan_single_shuffle(
+        spark, sf_dir, tmp_path, "default", with_deletes=True
+    )
+
+
 def test_sql_fold_commit_plan_single_shuffle(spark, sf_dir, tmp_path):
-    """The one-statement SQL fold (`_fold_replay_sql`, the default serial
-    upsert path) must produce the SAME physical shape the layered fold
-    pins above: the complete commit-output plan costs exactly ONE hash
-    exchange keyed by __bucket and sized to the table's bucket count,
-    with the snapshot scanned once, the batch scanned once, and no
-    broadcast — the nested-subquery construction changes only how many
-    times the driver analyzes the tree, never the resolved plan."""
-    import re
+    """The default merge engine's one-statement fold and commit-output
+    plan: one bucket-keyed exchange, two scans, no broadcast."""
+    _assert_fold_commit_plan_single_shuffle(spark, sf_dir, tmp_path, "default")
 
-    from fluss_spark.catalog import Catalog
-    from fluss_spark.sources.kv import BUCKET_COL
-    from fluss_spark.table import create_table
 
-    ev = load(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "value")
-    schema = TableSchema(
-        fields=[Field("user_id", "BIGINT"), Field("event_type", "STRING"), Field("value", "DOUBLE")],
-        primary_key=["user_id"],
-        num_buckets=8,
-    )
-    t = create_table(Catalog(str(tmp_path / "wh")), "db", "sql_fold_plan", schema)
-    t.upsert(ev.filter(F.col("event_id") % 2 == 0), ordering=["event_id"])
-    batch = ev.filter(F.col("event_id") % 2 == 1)
-    assert t.kv._fold_replay_sql_ok(batch, None, None)
-    changelog, bb, ps, _prior = t.kv._fold_replay_sql(spark, batch, ["event_id"], None)
-    simple = changelog._sc._jvm.PythonSQLUtils.explainString(
-        changelog._jdf.queryExecution(), "simple"
-    )
-    assert len(re.findall(r"Exchange hashpartitioning", simple)) == 1, simple
-    assert "BroadcastHashJoin" not in simple, simple
-
-    state0 = t.kv.catalog.current_commit("db", "sql_fold_plan")
-    out, _persisted, _auto = t.kv._commit_plan(
-        spark, changelog, 123456, bb, ps, state0, prior_included=True
-    )
-    full = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "simple"
-    )
-    assert len(re.findall(r"Exchange hashpartitioning", full)) == 1, full
-    assert re.search(rf"hashpartitioning\(`?{BUCKET_COL}`?#\d+, 8\)", full), full
-    assert full.count("InMemoryFileIndex") == 2, full
+@pytest.mark.parametrize("engine", [e for e in _FOLD_ENGINES if e != "default"])
+def test_engine_fold_commit_plan_single_shuffle(spark, sf_dir, tmp_path, engine):
+    """Every other merge engine (and partial update) keeps the same
+    single-exchange commit plan as the default engine."""
+    _assert_fold_commit_plan_single_shuffle(spark, sf_dir, tmp_path, engine)
 
 
 def test_group_commit_plan_single_shuffle(spark, sf_dir, tmp_path):
@@ -415,9 +423,7 @@ def test_group_commit_plan_single_shuffle(spark, sf_dir, tmp_path):
         ev.filter(F.col("event_id") % 3 == 2),
         ev.filter(F.col("event_id") % 5 == 0),
     ]
-    changelog, bb, ps, _prior = t.kv._fold_replay_sql(
-        spark, batches, ["event_id"], None
-    )
+    changelog = t.kv._fold(spark, batches, ["event_id"], None)
     simple = changelog._sc._jvm.PythonSQLUtils.explainString(
         changelog._jdf.queryExecution(), "simple"
     )
@@ -426,8 +432,7 @@ def test_group_commit_plan_single_shuffle(spark, sf_dir, tmp_path):
 
     state0 = t.kv.catalog.current_commit("db", "grp_fold_plan")
     out, _persisted, _auto = t.kv._commit_plan(
-        spark, changelog, [111, 222, 333], bb, ps, state0,
-        prior_included=True, grp_count=3,
+        changelog, [111, 222, 333], state0, grp_count=3
     )
     full = out._sc._jvm.PythonSQLUtils.explainString(
         out._jdf.queryExecution(), "simple"

@@ -26,6 +26,7 @@ from datetime import datetime, timedelta, timezone
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from fluss_spark.bucketing import bucket_expr
 from fluss_spark.catalog import Catalog, CommitState
 from fluss_spark.sources.log import COMMIT_DIR_COL, LogStore
 from fluss_spark.table import FlussTable
@@ -638,7 +639,7 @@ def _rebucket_locked(table: FlussTable, spark: SparkSession, new_buckets: int) -
 
     df = log.scan(spark, tiers="all")
     if schema.bucket_keys:
-        nb = F.pmod(F.hash(*schema.bucket_keys), F.lit(new_buckets)).cast("int")
+        nb = bucket_expr(schema.bucket_keys, new_buckets)
     else:
         # keyless log table: no routing contract to honor — any
         # deterministic spread works
@@ -680,9 +681,8 @@ def _rebucket_locked(table: FlussTable, spark: SparkSession, new_buckets: int) -
         kv = table.kv
         data_dir = f"data-v{version}"
         snap = kv.snapshot(spark)
-        bucket_expr = F.pmod(F.hash(*schema.bucket_keys), F.lit(new_buckets)).cast("int")
         (
-            snap.withColumn("__bucket", bucket_expr)
+            snap.withColumn("__bucket", bucket_expr(schema.bucket_keys, new_buckets))
             .repartition(min(new_buckets, 32), F.col("__bucket"))
             .write.mode("overwrite")
             .partitionBy(*schema.partition_keys, "__bucket")

@@ -58,6 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from fluss_spark.bucketing import bucket_expr, bucket_of, bucket_sql
 from fluss_spark.catalog import Catalog, CommitState
 from fluss_spark.operators.replay import (
     OP_COL,
@@ -318,12 +319,11 @@ class KvStore:
         return cond
 
     def _bucket_expr(self):
-        return F.pmod(F.hash(*self.schema.bucket_keys), F.lit(self.schema.num_buckets)).cast("int")
+        return bucket_expr(self.schema.bucket_keys, self.schema.num_buckets)
 
     def _bucket_sql(self) -> str:
         """SQL-string form of _bucket_expr (whole-select plan building)."""
-        keys = ", ".join(f"`{c}`" for c in self.schema.bucket_keys)
-        return f"CAST(pmod(hash({keys}), {self.schema.num_buckets}) AS INT)"
+        return bucket_sql([f"`{c}`" for c in self.schema.bucket_keys], self.schema.num_buckets)
 
     # ------------------------------------------------------------------ #
     # upsert / delete transaction (M1-M9)
@@ -764,10 +764,9 @@ class KvStore:
                     else f"`{c}`"
                 )
             if eager:
-                keys_sql = ", ".join(cast_sql[c] for c in schema.bucket_keys)
+                keys_sql = [cast_sql[c] for c in schema.bucket_keys]
                 bproj.append(
-                    f"CAST(pmod(hash({keys_sql}), {schema.num_buckets}) AS INT)"
-                    f" AS `{BUCKET_COL}`"
+                    f"{bucket_sql(keys_sql, schema.num_buckets)} AS `{BUCKET_COL}`"
                 )
             if grouped:
                 bproj.append(f"CAST({g} AS INT) AS `{GRP_COL}`")
@@ -2300,7 +2299,8 @@ class KvStore:
 
     def lookup(self, spark: SparkSession, key: dict[str, object]) -> DataFrame:
         """Point lookup by full primary key (L1, Lookuper.java:43-56).
-        The bucket id is computed driver-side from the manifest → ONE
+        The bucket id is the key's hash, computed on the driver
+        (fluss_spark.bucketing); the manifest maps that bucket to ONE
         data dir, one partition dir, then Parquet row-group stats prune
         within the bucket."""
         pk = self.schema.primary_key
@@ -2341,27 +2341,27 @@ class KvStore:
 
     def _keyed_read(self, spark: SparkSession, key: dict[str, object], bucket_key: list[str]) -> DataFrame:
         schema = self.schema
-        # cast literals to the DECLARED column types: Murmur3 hashes int
-        # and bigint (etc.) differently, so an untyped literal would route
-        # to the wrong bucket
-        types = {f.name: parse_type(f.type) for f in schema.fields}
-        bucket_expr = F.pmod(
-            F.hash(*[F.lit(key[c]).cast(types[c]) for c in bucket_key]), F.lit(schema.num_buckets)
-        )
+        declared = {f.name: f.type for f in schema.fields}
+        bk_types = [parse_type(declared[c]) for c in bucket_key]
         state = self.catalog.current_commit(self.db, self.table)
         version = state.snapshot_version
         manifest = self._manifest(version)
         if not manifest:
             return self.snapshot(spark).filter(self._key_cond(key))
         tail_start = self._tail_start(state)
-        # resolve the owning bucket DRIVER-SIDE: the hash of literals is a
-        # constant expression, so evaluate it once on a 1-row local
-        # relation (no table scan, no shuffle, single local task). The
-        # manifest then maps bucket -> exactly ONE data dir, so the lookup
-        # plan is a single scan pruned to one __bucket partition dir —
-        # not one scan per manifest dir (a 16-dir manifest previously
-        # built 16 scans to read <=1 row).
-        bkt = int(spark.range(1).select(bucket_expr.cast("int").alias("b")).first()["b"])
+        # the owning bucket, on the driver: the manifest then maps it to
+        # exactly ONE data dir, so the plan is a single scan pruned to one
+        # __bucket partition dir
+        bkt = bucket_of([key[c] for c in bucket_key], bk_types, schema.num_buckets)
+        if bkt is None:
+            # keys the router does not cover exactly: Spark hashes the
+            # literals cast to the DECLARED types (Murmur3 hashes int and
+            # bigint differently) on a 1-row relation
+            probe = bucket_expr(
+                [F.lit(key[c]).cast(t) for c, t in zip(bucket_key, bk_types)],
+                schema.num_buckets,
+            )
+            bkt = int(spark.range(1).select(probe.alias("b")).first()["b"])
         if schema.partition_keys:
             # pair-granular manifest: the key's partition values (typed
             # literals — Spark prunes partition dirs from them) plus the
@@ -2370,7 +2370,9 @@ class KvStore:
             pred = F.col(BUCKET_COL) == F.lit(bkt)
             for c in schema.partition_keys:
                 if c in key:
-                    pred = pred & (F.col(c) == F.lit(key[c]).cast(types[c]))
+                    pred = pred & (
+                        F.col(c) == F.lit(key[c]).cast(parse_type(declared[c]))
+                    )
             return self.snapshot(
                 spark, buckets=[bkt], pair_pred=pred
             ).filter(self._key_cond(key))

@@ -8,7 +8,9 @@ Reference semantics reproduced (not the implementation):
     declaratively so it scales to any bucket count)
   - bucket routing = hash(bucket keys) % n
     (common/bucketing/FlussBucketingFunction.java:27-45; we use Spark's
-    Murmur3 `hash()` — stability within this engine is what matters)
+    Murmur3 `hash()`, owned by fluss_spark/bucketing.py — the keyed-read
+    router there computes it on the driver and must equal Spark's bit
+    for bit, which tests/test_bucketing.py checks value by value)
   - sticky assignment for keyless appends
     (client/write/StickyBucketAssigner.java:35): spark_partition_id % n
     keeps each writer task on one bucket per batch
@@ -36,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from fluss_spark.bucketing import bucket_expr
 from fluss_spark.catalog import Catalog, CommitState
 from fluss_spark.types import (
     BUCKET_COL,
@@ -223,9 +226,7 @@ class LogStore:
         if BUCKET_COL in (extra_cols or []):
             pass  # caller pre-routed (e.g. replay keeps pk-bucket alignment)
         elif schema.bucket_keys:
-            out = out.withColumn(
-                BUCKET_COL, F.pmod(F.hash(*schema.bucket_keys), F.lit(n)).cast("int")
-            )
+            out = out.withColumn(BUCKET_COL, bucket_expr(schema.bucket_keys, n))
         else:
             out = out.withColumn(
                 BUCKET_COL, (F.spark_partition_id() % F.lit(n)).cast("int")

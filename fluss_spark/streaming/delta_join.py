@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fluss_spark.bucketing import bucket_expr
 from fluss_spark.table import FlussTable
 from fluss_spark.types import CHANGE_TYPE_COL, DELETE, OFFSET_COL
 
@@ -101,7 +102,7 @@ class DeltaJoin:
         job returning <= num_buckets rows; bounds the probe snapshot to
         those buckets' manifest dirs."""
         bk = other.schema.bucket_keys
-        expr = F.pmod(F.hash(*bk), F.lit(other.schema.num_buckets)).cast("int")
+        expr = bucket_expr(bk, other.schema.num_buckets)
         # collect_set, not distinct().collect(): map-side partial
         # aggregation reduces each scan partition to one <=num_buckets
         # set, so discovery is a single 1-reducer stage instead of a

@@ -3,6 +3,8 @@ schema evolution (field IDs), RBM merge aggregator."""
 
 from __future__ import annotations
 
+import datetime
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -296,19 +298,44 @@ def test_partial_update_aggregation_interplay(spark, catalog):
     assert row["total"] == 16 and row["status"] is None
 
 
-def test_lookup_bigint_key_routing(spark, catalog):
-    """Regression: the lookup key literal must be cast to the DECLARED
-    column type before hashing — Murmur3 hashes int32 and int64
-    differently, so an untyped python int routed to the wrong bucket
-    and returned empty."""
+def _ts(i):
+    return datetime.datetime(2024, 1, 1) + datetime.timedelta(hours=i)
+
+
+@pytest.mark.parametrize(
+    "ktype,key_of,probes",
+    [
+        # python ints on a BIGINT key: routed as BIGINT, not as INT
+        ("BIGINT", int, [(0, 0), (7, 7), (31, 31), (99, 99)]),
+        # inputs the driver-side router leaves to Spark's own cast: a
+        # mistyped or out-of-range value, a DOUBLE or TIMESTAMP bucket key
+        ("BIGINT", int, [("7", 7)]),
+        ("INT", int, [(True, "DATATYPE_MISMATCH")]),
+        ("INT", int, [(1 << 40, "CAST_OVERFLOW")]),
+        ("DOUBLE", float, [(7.0, 7), (7, 7)]),
+        ("TIMESTAMP", _ts, [(_ts(7), 7)]),
+    ],
+    ids=["bigint", "bigint-str", "int-bool", "int-overflow", "double", "timestamp"],
+)
+def test_lookup_bigint_key_routing(spark, catalog, ktype, key_of, probes):
+    """Regression: the lookup key literal must be routed as the DECLARED
+    column type — Murmur3 hashes int32 and int64 differently, so an
+    untyped python int routed to the wrong bucket and returned empty.
+    A probe wants the row i it returns, or the Spark error class it
+    raises (the same as when every lookup hashed its key in Spark)."""
     t = create_table(
         catalog, "db", "big_lk",
-        TableSchema(fields=[Field("k", "BIGINT"), Field("v", "STRING")], primary_key=["k"], num_buckets=8),
+        TableSchema(fields=[Field("k", ktype), Field("v", "STRING")], primary_key=["k"], num_buckets=8),
     )
-    t.upsert(spark.createDataFrame([(i, f"v{i}") for i in range(100)], "k bigint, v string"))
-    for key in (0, 7, 31, 99):
-        got = t.lookup(spark, {"k": key}).collect()
-        assert len(got) == 1 and got[0]["v"] == f"v{key}", f"key {key} mis-routed"
+    t.upsert(spark.createDataFrame([(key_of(i), f"v{i}") for i in range(100)], t.schema.to_struct_type()))
+    for key, want in probes:
+        for read in (t.lookup, t.prefix_lookup):
+            if isinstance(want, str):
+                with pytest.raises(Exception, match=want):
+                    read(spark, {"k": key}).collect()
+                continue
+            got = read(spark, {"k": key}).collect()
+            assert len(got) == 1 and got[0]["v"] == f"v{want}", f"key {key!r} mis-routed"
 
 
 import pytest

@@ -4,6 +4,8 @@ explainSql in its connector ITCases)."""
 
 from __future__ import annotations
 
+import itertools
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -120,6 +122,84 @@ def test_prefix_lookup_prunes_bucket_partition(spark, catalog):
     plans.assert_contains(plans.partition_filters(lk), "__bucket")
     plans.assert_contains(plans.pushed_filters(lk), "EqualTo(k,7)")
     assert sorted(r["v"] for r in lk.collect()) == ["v7.1", "v7b"]
+
+
+def _jobs_in(spark, fn):
+    """(fn(), number of Spark jobs fn started), counted by job group."""
+    sc = spark.sparkContext
+    group = f"jobpin-{next(_JOB_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.sc().clearJobGroup()
+    # the status store is filled by Spark's asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+_JOB_GROUPS = itertools.count()
+_JOB_PIN_TABLES = {
+    # name: (key type, key of row i, extra table options)
+    "int": ("INT", lambda i: i, {}),
+    "string": ("STRING", lambda i: f"u{i}", {}),
+    "partitioned": ("INT", lambda i: i, {"partition_keys": ["dt"]}),
+    "deferred": (
+        "INT", lambda i: i, {"properties": {"table.snapshot.defer-commits": "2"}}
+    ),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_JOB_PIN_TABLES))
+def test_keyed_read_starts_no_job_before_collect(spark, catalog, kind):
+    """A warmed point or prefix lookup resolves its bucket on the driver:
+    building the DataFrame starts NO Spark job (no 1-row hash probe),
+    and collecting it starts only the read's own jobs — on plain INT
+    and STRING keys, a partitioned table, and a deferred-commit table
+    whose WAL tail is merged over the bucket's snapshot dir."""
+    ktype, key_of, opts = _JOB_PIN_TABLES[kind]
+    fields = [
+        Field("k", ktype, nullable=False), Field("s", "INT", nullable=False), Field("v", "STRING")
+    ]
+    pk = ["k", "s"]
+    if "partition_keys" in opts:
+        fields.insert(0, Field("dt", "STRING", nullable=False))
+        pk = ["dt", *pk]
+    t = create_table(
+        catalog, "db", f"jobs_{kind}",
+        TableSchema(fields=fields, primary_key=pk, bucket_keys=["k"], num_buckets=4, **opts),
+    )
+    st = t.schema.to_struct_type()
+
+    def rows(ks, tag):
+        return [
+            ((("d1",) if "partition_keys" in opts else ()) + (key_of(i), j, f"{tag}{i}.{j}"))
+            for i in ks for j in range(2)
+        ]
+
+    t.upsert(spark.createDataFrame(rows(range(25), "v"), st))
+    if kind == "deferred":  # 2nd commit materializes, the 3rd is WAL-only
+        t.upsert(spark.createDataFrame(rows([3], "x"), st))
+    t.upsert(spark.createDataFrame(rows([7], "w"), st))
+    if kind == "deferred":
+        state = catalog.current_commit("db", t.name)
+        assert t.kv._manifest(state.snapshot_version)
+        assert t.kv._tail_start(state) is not None
+    part = {"dt": "d1"} if "partition_keys" in opts else {}
+    reads = {
+        "lookup": lambda: t.lookup(spark, {**part, "k": key_of(7), "s": 1}),
+        "prefix_lookup": lambda: t.prefix_lookup(spark, {**part, "k": key_of(7)}),
+    }
+    want = {"lookup": ["w7.1"], "prefix_lookup": ["w7.0", "w7.1"]}
+    # the deferred read merges the WAL tail over the snapshot dir (an
+    # anti-join plus a union): its plan takes 3 jobs, routing none
+    want_jobs = 3 if kind == "deferred" else 1
+    for name, read in reads.items():
+        read().collect()  # warm: snapshot-dir and manifest caches
+        df, built = _jobs_in(spark, read)
+        got, collected = _jobs_in(spark, df.collect)
+        assert sorted(r["v"] for r in got) == want[name], (name, got)
+        assert (built, collected) == (0, want_jobs), (name, built, collected)
 
 
 def test_star_join_broadcasts_dims(spark, sf_dir):
